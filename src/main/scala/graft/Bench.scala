@@ -1,46 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE swap a sort-merge join for a shuffled-hash join when the
-      // runtime build side's partitions fit in memory — skips two sorts
-      // on wide struct keys; decision is per-query from measured sizes,
-      // so it stays safe when a side is actually huge (default 0 = off)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      // drive the context cleaner on a short period: iterative ops
-      // (closure/k-hop/pageRank/BPE) localCheckpoint per round, and the
-      // default 30min GC cadence lets dead checkpoint blocks pile up
-      // across a long suite (round-9 sf1 OOM evidence)
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    // extra confs for A/B experiments: "k=v,k=v" (unset = contract run).
-    // Diagnostic knob: entries without '=' fail loud, and values may not
-    // contain commas (the separator) — spark.conf.set also rejects
-    // static confs at runtime with its own clear error.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(",").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _ => sys.error(
-          s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not k=v (note: comma " +
-            "separates entries, so values cannot contain commas)")
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
-    // one cheap query first: JVM/codegen/parquet-footer warmup so the
-    // alphabetically-first query doesn't absorb one-time session costs;
-    // then build the materialize-once media rigs so q26/q42/q84/q85
-    // time decode, not the rig encode
-    try {
-      SparkEntry.queries("q15_select_bag")(spark, sfDir).count()
-      SparkEntry.warmRigs(spark, sfDir)
-    } catch { case _: Throwable => () }
+    val cpus = Session.cpus
+    val spark = Session.build(cpus)
+    SparkEntry.warm(spark, sfDir)
     // optional comma-separated name filter for local iteration; the
     // driver never sets it, so the contract run benches everything
     val only = sys.env.get("SPARK_GRAFT_ONLY")

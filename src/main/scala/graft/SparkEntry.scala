@@ -6,6 +6,7 @@ import graft.dsl._
 import graft.engine.Projections
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Driver contract: one `queries` entry per implemented operator
   * (SURVEY.md §2 + the LLM-pipeline tier), each with DuckDB-equivalent
@@ -187,7 +188,7 @@ object SparkEntry {
     *
     * Concurrency note (round-16 ADVICE): the set/restore pair mutates
     * the SESSION-global shuffle width, so stream entries must not run
-    * concurrently in one session — Verify/Bench/JobCount all run
+    * concurrently in one session — Verify/Bench/Inspect all run
     * entries sequentially, which is the supported mode. */
   private[graft] def withStreamStateWidth[A](sp: SparkSession)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
@@ -331,8 +332,20 @@ object SparkEntry {
     q143PhaseNames.zip(Seq(tSave, tGraph, tSubj, tCompact, tLoad))
   }
 
+  /** One-time session warm-up before timed or counted entries: one
+    * cheap query first (JVM / codegen / parquet-footer costs, so the
+    * first named entry doesn't absorb them), then [[warmRigs]]. A
+    * failure is reported on stderr and the caller carries on. */
+  def warm(sp: SparkSession, dir: String): Unit =
+    try {
+      queries("q15_select_bag")(sp, dir).count()
+      warmRigs(sp, dir)
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[warm] ${e.getClass.getName}: ${e.getMessage}")
+    }
+
   /** Warm every materialize-once rig for an sf-dir so no timed query
-    * pays a rig build — Bench calls this from its warmup probe. */
+    * pays a rig build — [[warm]]'s second step. */
   def warmRigs(sp: SparkSession, dir: String): Unit = {
     syntheticBlobs(sp, dir).count()
     syntheticGifBlobs(sp, dir).count()

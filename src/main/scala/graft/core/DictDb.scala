@@ -106,43 +106,18 @@ object DictDb {
       if (extraTerms.isEmpty) dict
       else dict.unionByName(DictDb.termDf(spark, extraTerms.distinct))
         .dropDuplicates("id")
-    // A/B knob (round-16 VERDICT item 4): fold the N per-column decode
-    // joins into ONE posexplode → ONE dict join → regroup. Exchanges:
-    // N result-side shuffles become 2 (by id, then by row id) and the
-    // dict-side hash relation builds once instead of N times; the
-    // price is the explode (N× rows) and a collect_list regroup.
-    // Measured before defaulting — see OPTIMIZATION_r16.md.
-    if (cols.length >= 2 && spark.conf.getOption("graft.dict.decodeFold")
-        .contains("explode")) {
-      val withId = df.select(
-        monotonically_increasing_id().as("__rid") +: cols.map(col): _*)
-      // posexplode keeps null elements as (pos, null) rows, so unbound
-      // optional ids decode to NULL terms exactly like the left_outer
-      // per-column joins
-      val ex = withId.select(col("__rid"),
-        posexplode(array(cols.map(col): _*)).as(Seq("__pos", "__id")))
-      val joined = ex.join(
-        d0.select(col("id").as("__id"), col("term")).hint("shuffle_hash"),
-        Seq("__id"), "left_outer")
-      val agg = joined.groupBy("__rid").agg(
-        array_sort(collect_list(struct(col("__pos"), col("term"))))
-          .as("__ts"))
-      agg.select(cols.zipWithIndex.map { case (c, i) =>
-        col("__ts")(i).getField("term").as(c) }: _*)
-    } else {
-      var out = df
-      for (v <- cols) {
-        // shuffle-hash hint: a sort-merge join would re-sort the (large)
-        // dict per decode; hashing it once per partition is the right
-        // shape when the result side is the small one
-        val d = d0.select(col("id").as(s"__did_$v"), col("term").as(s"__dt_$v"))
-          .hint("shuffle_hash")
-        out = out.join(d, out.col(v) === col(s"__did_$v"), "left_outer")
-          .drop(v).drop(s"__did_$v")
-          .withColumnRenamed(s"__dt_$v", v)
-      }
-      out.select(cols.map(col): _*)
+    var out = df
+    for (v <- cols) {
+      // shuffle-hash hint: a sort-merge join would re-sort the (large)
+      // dict per decode; hashing it once per partition is the right
+      // shape when the result side is the small one
+      val d = d0.select(col("id").as(s"__did_$v"), col("term").as(s"__dt_$v"))
+        .hint("shuffle_hash")
+      out = out.join(d, out.col(v) === col(s"__did_$v"), "left_outer")
+        .drop(v).drop(s"__did_$v")
+        .withColumnRenamed(s"__dt_$v", v)
     }
+    out.select(cols.map(col): _*)
   }
 
   /** [[encode]] for a quad store: four id columns, one dict over all

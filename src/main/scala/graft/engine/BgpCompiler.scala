@@ -1185,37 +1185,13 @@ object BgpCompiler {
               _ => functions.lit(true)))
             .select(col("id").as(present.head))
           a.join(ids, Seq(present.head), "left_semi")
-        } else if (a.sparkSession.conf.getOption(
-            "graft.filter.dictRehydration").contains("frame")) {
-          // measured escape hatch (Stress A/B, round 11): at bench
-          // scale the pairs plan pays the solution lineage twice
-          // (~1.3× slower on a 600k-solution frame); this flag
-          // restores the full-frame double dict join for workloads
-          // where solutions are modest and the dict is the small side
-          var t = a
-          for (v <- present if !v.startsWith("__ex_"))
-            t = t.join(d.select(col("id").as(v), col("term").as(s"__f_$v"))
-              .hint("shuffle_hash"), Seq(v), "left_outer")
-          def termOfF(name: String): Column =
-            if (present.contains(name) && !name.startsWith("__ex_"))
-              col(s"__f_$name") else nullTerm
-          t.where(filterCol(f, termOfF,
-              n => if (present.contains(n)) col(n).isNotNull
-                else functions.lit(false)))
-            .drop(present.map(v => s"__f_$v"): _*)
         } else {
-          val tuples0 = a.select(present.map(col): _*).distinct()
-          // A/B knob (round-16 VERDICT item 3): persist the BOUNDED
-          // distinct-tuple frame. Measured at sf0.1 + Stress — the
-          // solution lineage still executes twice either way (the
-          // semi-join's LEFT side is `a` itself, not the tuple frame),
-          // so this can only save the tuple-side recompute, and it
-          // pins cache blocks for the session. Default off.
-          val tuples = if (a.sparkSession.conf.getOption(
-              "graft.filter.tupleCache").contains("persist"))
-            tuples0.persist()
-          else tuples0
-          var t = tuples
+          // the semi-join's left side is `a` itself, so the solution
+          // lineage executes twice: measured ~1.3× slower than a
+          // full-frame double dict join on a 600k-solution frame
+          // (Stress, round 11) — the price of dict work bounded by
+          // distinct tuples instead of solution rows
+          var t = a.select(present.map(col): _*).distinct()
           // EXISTS marker columns (__ex_) are 0/1 flags, not term ids
           // — they ride the tuple key for BOUND atoms but never
           // rehydrate against the dictionary

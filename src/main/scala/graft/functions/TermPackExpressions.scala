@@ -23,10 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * byte layout per term is `kind(1) · nullmask(1) · [len(4)+utf8]lex ·
   * [bits(8)]num · [len(4)+utf8]lang · [len(4)+utf8]datatype`, fields
   * in fixed order with explicit lengths (no separator can collide with
-  * payload bytes), doubles as raw `doubleToLongBits` (NaN payloads and
-  * −0.0 round-trip bit-exactly). `unpackTermAt(pack(ts), i) ≡ ts(i)`
-  * for every term kind — TermInteropSpec pins the round-trip
-  * property-style over all kinds and adversarial field values.
+  * payload bytes), doubles as `doubleToLongBits(v + 0.0)`: −0.0 packs
+  * as 0.0 and every NaN payload as the one canonical NaN, so the packed
+  * key equates exactly the doubles Spark's struct grouping equates.
+  * `unpackTermAt(pack(ts), i) ≡ ts(i)` for every term kind, up to that
+  * double canonicalization — TermInteropSpec pins the round-trip and
+  * the dedup equivalence over all kinds and adversarial field values.
   */
 object TermPackExpressions {
 
@@ -62,7 +64,7 @@ object TermPackExpressions {
             }
             if (hasLex) str(r.getUTF8String(1))
             if (hasNum) w.writeLong(
-              java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
+              java.lang.Double.doubleToLongBits(r.getDouble(2) + 0.0))
             if (hasLang) str(r.getUTF8String(3))
             if (hasDt) str(r.getUTF8String(4))
         }
@@ -77,7 +79,8 @@ object TermPackExpressions {
   }
 
   /** The `idx`-th term of a [[TermsPack]] binary, back as a struct —
-    * the exact inverse (bit-exact doubles, byte-exact strings). */
+    * the inverse (canonical doubles, byte-exact strings). An `idx` past
+    * the packed terms fails with an out-of-range error. */
   case class TermUnpackAt(child: Expression, idx: Int)
       extends UnaryExpression with CodegenFallback {
     require(idx >= 0, "index must be non-negative")
@@ -90,6 +93,8 @@ object TermPackExpressions {
       var k = 0
       var result: Any = null
       while (k <= idx) {
+        if (in.available() == 0) throw new IllegalArgumentException(
+          s"index $idx out of range for packed terms ($k present)")
         val kind = in.readByte()
         if (kind == NullStruct) {
           if (k == idx) result = null

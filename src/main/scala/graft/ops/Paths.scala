@@ -59,14 +59,7 @@ object Paths {
     // decode + the extra setup shuffle cost more than the 32-partition
     // exchange they save. Checkpointed binary rows stay the fast form
     // on this box; at cluster scale, bucket the edge source instead.
-    // Round 16 re-ran the A/B at sf1 via this measurement knob
-    // (default off — the shipped shape is the checkpoint): numbers in
-    // OPTIMIZATION_r16.md.
-    val e =
-      if (edges0.sparkSession.conf.getOption("graft.iter.preCluster")
-          .contains("true"))
-        edges0.dropDuplicates("src", "dst").repartition(col("src")).persist()
-      else barrier(edges0.dropDuplicates("src", "dst"))
+    val e = barrier(edges0.dropDuplicates("src", "dst"))
     // `all` stays a UNION of per-round checkpointed frontiers — each
     // segment is already materialized, so the accumulated set is never
     // recomputed OR re-checkpointed per round (re-checkpointing `all`
@@ -135,13 +128,7 @@ object Paths {
     def barrier(df: DataFrame): DataFrame =
       df.localCheckpoint().select(col("src").as("src"), col("dst").as("dst"))
     // checkpoint, not persist — see [[closureEdges]]'s measured note
-    // (and its round-16 sf1 re-measurement knob, mirrored here)
-    val e =
-      if (db.df.sparkSession.conf.getOption("graft.iter.preCluster")
-          .contains("true"))
-        edges(db, preds).dropDuplicates("src", "dst")
-          .repartition(col("src")).persist()
-      else barrier(edges(db, preds).dropDuplicates("src", "dst"))
+    val e = barrier(edges(db, preds).dropDuplicates("src", "dst"))
     var all = e
     var frontier = e
     for (_ <- 2 to maxHops) {

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ops.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Recall@k of every ANN family against brute-force ground truth — the
@@ -166,10 +166,7 @@ object AnnRecall {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     if (args.length > 1 && args(1) == "pairs") {
       val threshold = if (args.length > 2) args(2).toDouble else 0.45

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ops.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** nProbe sweep for the production-sized IVF-PQ point: isolates how
@@ -16,10 +15,7 @@ object AnnSweep {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/sf1"
     val k = if (args.length > 1) args(1).toInt else 10
     val nQ = if (args.length > 2) args(2).toInt else 50
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").persist()
     val n = emb.count()
     val q = emb.where(col("vec_id") < nQ)

@@ -69,10 +69,7 @@ object Endpoint {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Endpoint <quad-store-path> [port]")
     val port = if (args.length > 1) args(1).toInt else 3330
-    val spark = SparkSession.builder()
-      .appName("graft-endpoint").master("local[*]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
+    val spark = graft.Session.build()
     val server = start(spark, args(0), port)
     println(s"SPARQL endpoint on port " +
       s"${server.getAddress.getPort} (query: /sparql, update: /update)")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Organic-skew AQE evidence: run the hot-key shuffled join shape on a
@@ -22,23 +21,15 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "65536")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16384")
+    val spark = graft.Session.build(extra = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "65536",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16384",
       // AQE splits a skewed reducer partition at MAPPER granularity —
       // a 29 MB parquet scanned as one input split gives one mapper,
       // and a one-mapper hot partition cannot be split at all. Smaller
       // input splits = production mapper counts in miniature.
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.files.maxPartitionBytes" -> "2m"))
     // carry real payload columns through the shuffle: skew detection
     // works on COMPRESSED map-output bytes, and a partition of one
     // repeated join key with no payload compresses ~100:1 — below the

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.streaming.Events
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Separates the streaming-tier HARNESS cost from operator cost. The
@@ -26,10 +25,7 @@ import org.apache.spark.sql.functions._
 object StreamControl {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

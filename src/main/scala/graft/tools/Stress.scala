@@ -5,7 +5,7 @@ import graft.core.Term._
 import graft.dsl._
 import graft.engine.Projections
 import graft.ops.Dedup
-import org.apache.spark.sql.{functions, SparkSession}
+import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 
 /** Scale stress runs (beyond the driver's sf0.1 bench):
@@ -19,10 +19,7 @@ object Stress {
     // replication factor: 10x by default; pass a second arg for bigger
     // scale points (id offsets hold up to ~100x)
     val nReps = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[stress] $label%-44s ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
@@ -488,24 +485,15 @@ object Stress {
         runs(graft.engine.BgpCompiler.compileDict(dict, selective)
           .select("o", "p"))
       }
-      // round-11 A/B (verdict-r10 wrong#2): dict var-var FILTER. The
-      // shipped plan rehydrates only the DISTINCT referenced-id pairs
-      // (quantity 1-50 × linenumber 1-7 → ≤350 pairs) and semi-joins
-      // back; the round-10 plan it replaced shuffle-hash-joined the
-      // dictionary into the FULL 600k-solution frame twice. Same
-      // decode-included end-to-end shape for both.
+      // dict var-var FILTER: the plan rehydrates only the DISTINCT
+      // referenced-id pairs (quantity 1-50 × linenumber 1-7 → ≤350
+      // pairs) and semi-joins back. Decode-included end-to-end shape.
       val fvvPats = Seq(
         TriplePattern(V("l"), T(TKeyword("l_quantity")), V("q")),
         TriplePattern(V("l"), T(TKeyword("l_linenumber")), V("m")))
       time("5x var-var FILTER, dict (distinct-pair rehydration)") {
         runs(Projections.selectDf(dict,
           fvvPats :+ FilterVarCmp(V("q"), Gt, V("m")), Seq(V("l"))))
-      }
-      time("5x var-var FILTER, dict (A/B: full-frame rehydration)") {
-        spark.conf.set("graft.filter.dictRehydration", "frame")
-        try runs(Projections.selectDf(dict,
-          fvvPats :+ FilterVarCmp(V("q"), Gt, V("m")), Seq(V("l"))))
-        finally spark.conf.unset("graft.filter.dictRehydration")
       }
       dict.unpersist(); dbIdx.unpersist()
     }

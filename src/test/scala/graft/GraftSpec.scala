@@ -9,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession for the whole forked test JVM. */
 object TestSpark {
-  lazy val session: SparkSession = {
-    val sp = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    sp.sparkContext.setLogLevel("ERROR")
-    sp
-  }
+  lazy val session: SparkSession = Session.build(cpus = "4", logLevel = "ERROR")
 }
 
 /** Base spec: the reference's `friends` fixture (alpha_test.clj:28-45)

@@ -480,8 +480,7 @@ class SelectSpec extends GraftSpec {
     } finally dd.unpersist()
   }
 
-  test("dict filter rehydration flag: 'frame' plan ≡ default pairs " +
-      "plan (measured escape hatch, Stress A/B round 11)") {
+  test("dict var-var filter pairs plan ≡ struct TripleDb result on the same data") {
     val price = k("price")
     val d = db(
       (k("a"), price, TLong(5)), (k("b"), price, TDouble(2.5)),
@@ -490,16 +489,15 @@ class SelectSpec extends GraftSpec {
       pat(?("x"), T(price), ?("p1")),
       pat(?("y"), T(price), ?("p2")),
       FilterVarCmp(?("p1"), Lt, ?("p2")))
+    def bagOf(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (fromRow(r.getStruct(0)), fromRow(r.getStruct(1))))
+      .groupBy(identity).map { case (t, n) => t -> n.size }
+    val vars = Seq(?("x"), ?("y"))
     val dd = d.dictEncode()
     try {
-      def run() = Projections.selectDf(dd, q, Seq(?("x"), ?("y")))
-        .collect().toSeq
-        .map(r => (fromRow(r.getStruct(0)), fromRow(r.getStruct(1)))).toSet
-      val pairsPlan = run()
-      spark.conf.set("graft.filter.dictRehydration", "frame")
-      val framePlan = try run()
-        finally spark.conf.unset("graft.filter.dictRehydration")
-      assert(pairsPlan == framePlan && pairsPlan.nonEmpty)
+      val pairsPlan = bagOf(Projections.selectDf(dd, q, vars))
+      assert(pairsPlan == bagOf(Projections.selectDf(d, q, vars)) &&
+        pairsPlan.nonEmpty)
     } finally dd.unpersist()
   }
 

@@ -331,11 +331,15 @@ class TermInteropSpec extends GraftSpec {
       "dedup; null structs keep their own equivalence class") {
     import graft.functions.TermPackExpressions._
     import org.apache.spark.sql.functions
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.BinaryType
     val exotic = db(
       (k("a"), k("p"), s("tab\there\nand \"quotes\" \\ backslash %pct")),
       (TNil, k("p"), s("")),
       (k("b"), k("p"), l(9007199254740993L)),          // exact past 2^53
       (k("c"), k("p"), TDouble(-0.0)),
+      (k("z"), k("p"), TDouble(0.0)),                  // ≡ -0.0 as a struct key
+      (k("z"), k("p"), TDouble(-0.0)),
       (k("c2"), k("p"), TDouble(1.0 / 3.0)),           // full mantissa
       (k("d"), k("p"), TLangString("héllo 😀 astral", "de")),
       (k("e"), k("p"), TTyped("foo>bar", "http://some/data type")),
@@ -363,5 +367,10 @@ class TermInteropSpec extends GraftSpec {
       col("o")).head()
     assert(nr.isNullAt(0))
     assert(nr.getStruct(1) == nr.getStruct(2))
+    // an index past the packed terms is a clear out-of-range error
+    val one = TermsPack(Seq(Literal.create(null, Term.schema))).eval()
+    val oob = intercept[IllegalArgumentException](
+      TermUnpackAt(Literal(one, BinaryType), 1).eval())
+    assert(oob.getMessage == "index 1 out of range for packed terms (1 present)")
   }
 }
