@@ -298,11 +298,6 @@ object DictDb {
       .option("path", s"$path/dict").saveAsTable(dictTable)
   }
 
-  /** Load a [[save]]d store: predicate slices rebuilt from the
-    * partition directories (their NAMES come from one tiny dict probe
-    * over the keyword ids — partition values are a metadata-only
-    * query), per-slice stats from parquet metadata, dict read bucketed.
-    */
   /** GDPR-style takedown for a [[save]]d dict store: append the doomed
     * encoded triples (long columns s/p/o) to the tombstone set under
     * the triples dir. [[load]] masks them; [[compact]] reclaims the
@@ -320,28 +315,35 @@ object DictDb {
     * predicate-id partitions; only files holding a deleted triple are
     * rewritten. */
   def compact(spark: SparkSession, path: String): Unit =
-    Tombstones.compactPartitioned(spark, s"$path/triples",
-      Seq("s", "p", "o"), "pid")
+    Tombstones.compactPartitioned(spark, s"$path/triples", TripleIds,
+      PartitionedStore.Pid)
 
+  /** Load a [[save]]d store: one slice per predicate-id partition
+    * directory (slices prune partitions at scan time) with its on-disk
+    * bytes as the stat, tombstoned triples masked at read, the dict
+    * read bucketed. Costs one Spark job: the dict probe that names the
+    * keyword predicate ids ([[keywordNames]]); the store read itself is
+    * a partition listing ([[PartitionedStore]]). */
   def load(spark: SparkSession, path: String, dictTable: String): DictDb = {
-    val raw0 = spark.read.parquet(s"$path/triples")
-    val raw = Tombstones.mask(spark, s"$path/triples", raw0, Seq("s", "p", "o"))
     val dict = spark.table(dictTable)
-    val pids = raw0.select("pid").distinct().collect().map(_.getLong(0))
-    val names = dict
-      .where(col("id").isin(pids.toIndexedSeq: _*) &&
-        col("term.kind") === Term.KKeyword)
+    val l = PartitionedStore.load[Long](spark, s"$path/triples", TripleIds,
+      PartitionedStore.Pid)(keywordNames(dict))
+    DictDb(l.frame, dict, l.slices, l.stats)
+  }
+
+  /** Rows of the durable encoded stores: term ids. */
+  private val TripleIds: StructType = StructType(
+    Seq("s", "p", "o").map(StructField(_, LongType, nullable = false)))
+  private val QuadIds: StructType = TripleIds.add("g", LongType, nullable = false)
+
+  /** Predicate id → keyword lex for the ids that name a keyword term:
+    * one probe of the dict (a real lookup, so a job). */
+  private def keywordNames(dict: DataFrame)(pids: Seq[Long]): Map[Long, String] =
+    if (pids.isEmpty) Map.empty
+    else dict
+      .where(col("id").isin(pids: _*) && col("term.kind") === Term.KKeyword)
       .select(col("id"), col("term.lex"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val slices = names.map { case (pid, name) =>
-      name -> raw.where(col("pid") === pid).drop("pid")
-    }
-    val stats = slices.map { case (name, slice) =>
-      name -> slice.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong
-    }
-    DictDb(raw.drop("pid"), dict, slices, stats)
-  }
 
   // ---- durable form of the encoded QUAD store: [[save]]/[[load]]/
   // delete/compact with the graph id riding as a fourth 8-byte key.
@@ -370,29 +372,16 @@ object DictDb {
   /** Physically drop tombstoned quads, pruned to affected predicate-id
     * partitions; only files holding a deleted quad are rewritten. */
   def compactQuads(spark: SparkSession, path: String): Unit =
-    Tombstones.compactPartitioned(spark, s"$path/quads",
-      Seq("s", "p", "o", "g"), "pid")
+    Tombstones.compactPartitioned(spark, s"$path/quads", QuadIds,
+      PartitionedStore.Pid)
 
+  /** Load a [[saveQuads]]d store (≙ [[load]]: one job, the dict probe). */
   def loadQuads(spark: SparkSession, path: String,
                 dictTable: String): DictQuadDb = {
-    val raw0 = spark.read.parquet(s"$path/quads")
-    val raw = Tombstones.mask(spark, s"$path/quads", raw0,
-      Seq("s", "p", "o", "g"))
     val dict = spark.table(dictTable)
-    val pids = raw0.select("pid").distinct().collect().map(_.getLong(0))
-    val names = dict
-      .where(col("id").isin(pids.toIndexedSeq: _*) &&
-        col("term.kind") === Term.KKeyword)
-      .select(col("id"), col("term.lex"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val slices = names.map { case (pid, name) =>
-      name -> raw.where(col("pid") === pid).drop("pid")
-    }
-    val stats = slices.map { case (name, slice) =>
-      name -> slice.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong
-    }
-    DictQuadDb(raw.drop("pid"), dict, slices, stats)
+    val l = PartitionedStore.load[Long](spark, s"$path/quads", QuadIds,
+      PartitionedStore.Pid)(keywordNames(dict))
+    DictQuadDb(l.frame, dict, l.slices, l.stats)
   }
 
   /** [[merge]] for encoded quad stores: set union on the four 8-byte

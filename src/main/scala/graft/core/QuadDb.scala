@@ -140,39 +140,26 @@ object QuadDb {
     * directory; the graph column rides along and graph scoping remains
     * a pushed filter. */
   def save(db: QuadDb, path: String): Unit = {
-    val predName = when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
-    db.df.withColumn("pred", predName)
+    db.df.withColumn("pred", PartitionedStore.predValue)
       .write.mode("overwrite").partitionBy("pred").parquet(path)
   }
 
-  /** The masked quad FRAME of a [[save]]d store, without slice/stats
-    * building — the mutation-internal read ([[graft.ops.Update]] /
-    * [[graft.ops.GraphMgmt]] deltas): those paths only anti-join or
-    * filter the frame, so [[load]]'s per-load partition-listing job
-    * (the `pred` distinct) and slice stats are pure overhead there.
-    * Query paths keep [[load]]. */
+  /** The masked quad FRAME of a [[save]]d store, without slices or
+    * stats — the mutation-internal read ([[graft.ops.Update]] /
+    * [[graft.ops.GraphMgmt]] deltas), which only anti-joins or filters
+    * the frame. Same known-schema read as [[load]]
+    * ([[PartitionedStore.frame]]); query paths keep [[load]]. */
   private[graft] def loadFrame(spark: SparkSession, path: String): DataFrame =
-    Tombstones.mask(spark, path, spark.read.parquet(path),
-      Seq("s", "p", "o", "g")).drop("pred")
+    PartitionedStore.frame(spark, path, schema, PartitionedStore.Pred)
 
-  /** Load a [[save]]d quad store, rebuilding predicate slices from the
-    * partition directories. Deleted-but-not-yet-compacted quads are
-    * masked at read (same [[Tombstones]] contract as [[TripleDb.load]]). */
+  /** Load a [[save]]d quad store (≙ [[TripleDb.load]]): one slice per
+    * keyword-predicate partition with its on-disk bytes as the stat,
+    * deleted-but-not-yet-compacted quads masked at read. Runs no Spark
+    * job: the cost is the partition listing ([[PartitionedStore]]). */
   def load(spark: SparkSession, path: String): QuadDb = {
-    val raw0 = spark.read.parquet(path)
-    val raw = Tombstones.mask(spark, path, raw0, Seq("s", "p", "o", "g"))
-    // metadata-only job: distinct values of a partition column
-    val preds = raw0.select("pred").distinct().collect()
-      .map(_.getString(0)).filter(_ != "__other")
-    val slices = preds.map { name =>
-      name -> raw.where(col("pred") === name).drop("pred")
-    }.toMap
-    val stats = slices.map { case (name, slice) =>
-      name -> slice.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong
-    }
-    QuadDb(raw.drop("pred"), slices, stats)
+    val l = PartitionedStore.load[String](spark, path, schema,
+      PartitionedStore.Pred)(PartitionedStore.keywordPreds)
+    QuadDb(l.frame, l.slices, l.stats)
   }
 
   /** Per-GRAPH VoID statistics: the W3C VoID property-partition
@@ -194,11 +181,9 @@ object QuadDb {
     * full quad: the same triple asserted in another graph is a
     * different fact and stays live. */
   def deleteQuads(quads: DataFrame, path: String): Unit = {
-    val predName = when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
     Tombstones.append(
       quads.select(col("s"), col("p"), col("o"), col("g"),
-        predName.as("pred")),
+        PartitionedStore.predValue.as("pred")),
       path, keyCols = Seq("s", "p", "o", "g"))
   }
 
@@ -222,5 +207,5 @@ object QuadDb {
     * rewritten ([[Tombstones.compactPartitioned]]). Load before and
     * after are equivalent. */
   def compact(spark: SparkSession, path: String): Unit =
-    Tombstones.compactPartitioned(spark, path, Seq("s", "p", "o", "g"), "pred")
+    Tombstones.compactPartitioned(spark, path, schema, PartitionedStore.Pred)
 }

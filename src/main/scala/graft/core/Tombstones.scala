@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Shared tombstone + partition-pruned-compaction machinery for the
   * durable stores ([[TripleDb]], [[DictDb]]) — the same GDPR contract
@@ -258,15 +259,20 @@ private[graft] object Tombstones {
     * of the store passes as a codegen'd scan-side filter — no
     * broadcast of a huge key set, no store-wide shuffle. The two
     * shapes are row-identical (no false negatives; positives are
-    * exactly verified by the join). */
+    * exactly verified by the join).
+    *
+    * `keys` is the tombstone key schema, the columns the deletes
+    * wrote: the tombstone set is read with it (no schema-inference
+    * job) and anti-joined on its field names. */
   def mask(spark: SparkSession, store: String, df: DataFrame,
-           keyCols: Seq[String]): DataFrame =
-    maskAt(spark, tombPath(store), df, keyCols)
+           keys: StructType): DataFrame =
+    maskAt(spark, tombPath(store), df, keys)
 
   def maskAt(spark: SparkSession, tombDir: String, df: DataFrame,
-             keyCols: Seq[String]): DataFrame = {
+             keys: StructType): DataFrame = {
     if (!existAt(spark, tombDir)) return df
-    val tomb = spark.read.parquet(tombDir).select(keyCols.map(col): _*)
+    val keyCols = keys.fieldNames.toSeq
+    val tomb = spark.read.schema(keys).parquet(tombDir)
     val minBytes = spark.conf
       .get(BloomMinBytesKey, BloomMinBytesDefault.toString).toLong
     val bloom =
@@ -344,23 +350,28 @@ private[graft] object Tombstones {
     spark.catalog.refreshByPath(tombDir)
   }
 
-  /** Physically drop tombstoned rows from a `partitionBy(partCol)`
-    * store. Partition-pruned: only partitions named in the tombstones
-    * are even scanned to find affected files, and only files holding a
-    * deleted row are rewritten (staging-then-swap, same discipline as
-    * the index compactors). Clears the tombstone set at the end.
+  /** Physically drop tombstoned rows from a `partitionBy(part)` store
+    * whose rows are `schema` (its key columns). Partition-pruned: only
+    * partitions named in the tombstones are even scanned to find
+    * affected files, and only files holding a deleted row are rewritten
+    * (staging-then-swap, same discipline as the index compactors). The
+    * store is read with its known schema ([[PartitionedStore.raw]]), so
+    * a rewritten partition keeps its exact name — an inferred `pred`
+    * would turn `007` into `7`. Clears the tombstone set at the end.
     */
   def compactPartitioned(spark: SparkSession, store: String,
-                         keyCols: Seq[String], partCol: String): Unit = {
+                         schema: StructType, part: StructField): Unit = {
     if (!exist(spark, store)) return
+    val keyCols = schema.fieldNames.toSeq
+    val partCol = part.name
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(hconf)
-    val tomb = spark.read.parquet(tombPath(store))
+    val tomb = spark.read.schema(schema.add(part)).parquet(tombPath(store))
     // bounded by the store's partition count (predicates / pred ids)
     val parts = tomb.select(partCol).distinct().collect().map(_.get(0))
     val keys = tomb.select(keyCols.map(col): _*)
     // file list bounded by the AFFECTED partitions' file count
-    val affected = spark.read.parquet(store)
+    val affected = PartitionedStore.raw(spark, store, schema, part)
       .where(col(partCol).isin(parts.toIndexedSeq: _*))
       .withColumn("_f", input_file_name())
       .join(keys, keyCols).select("_f").distinct()
@@ -374,7 +385,7 @@ private[graft] object Tombstones {
       // lex containing '/' lands on disk as pred=...%2F... and in the
       // URI as %252F); string-equality against the same function cannot
       val affectedSet = affected.toSet
-      spark.read.parquet(store)
+      PartitionedStore.raw(spark, store, schema, part)
         .where(col(partCol).isin(parts.toIndexedSeq: _*))
         .where(input_file_name().isInCollection(affectedSet))
         .join(keys, keyCols, "left_anti")

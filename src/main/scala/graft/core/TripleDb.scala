@@ -23,8 +23,9 @@ import org.apache.spark.sql.types._
   */
 final case class TripleDb(df: DataFrame,
                           predIndex: Map[String, DataFrame] = Map.empty,
-                          /** Per-predicate source size in bytes (parquet
-                            * metadata — no job). Feeds BGP pattern
+                          /** Per-predicate source size in bytes (on-disk
+                            * parquet bytes or plan statistics — no
+                            * job). Feeds BGP pattern
                             * ordering: a pattern over a 5-row dimension
                             * slice should scan before one over a 100 TB
                             * fact slice when the boundness heuristic
@@ -89,9 +90,7 @@ object TripleDb {
     * partition directory instead of touching the whole store.
     */
   def save(db: TripleDb, path: String): Unit = {
-    val predName = when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
-    db.df.withColumn("pred", predName)
+    db.df.withColumn("pred", PartitionedStore.predValue)
       .write.mode("overwrite").partitionBy("pred").parquet(path)
   }
 
@@ -118,22 +117,18 @@ object TripleDb {
     * prunes to the affected `pred=` directories.
     */
   def deleteTriples(triples: DataFrame, path: String): Unit = {
-    val predName = when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
     Tombstones.append(
-      triples.select(col("s"), col("p"), col("o"), predName.as("pred")), path,
+      triples.select(col("s"), col("p"), col("o"),
+        PartitionedStore.predValue.as("pred")), path,
       keyCols = Seq("s", "p", "o"))
   }
 
-  /** The masked triple FRAME of a [[save]]d store, without slice/stats
-    * building — the mutation-internal read (≙ [[QuadDb.loadFrame]]):
-    * semi/anti-join and filter callers never touch predicate slices,
-    * so [[load]]'s partition-listing job (the `pred` distinct collect)
-    * and per-slice stats are pure overhead there. Query paths keep
-    * [[load]]. */
+  /** The masked triple FRAME of a [[save]]d store, without slices or
+    * stats — the mutation-internal read (≙ [[QuadDb.loadFrame]]) for
+    * semi/anti-join and filter callers. Same known-schema read as
+    * [[load]] ([[PartitionedStore.frame]]); query paths keep [[load]]. */
   private[graft] def loadFrame(spark: SparkSession, path: String): DataFrame =
-    Tombstones.mask(spark, path, spark.read.parquet(path),
-      Seq("s", "p", "o")).drop("pred")
+    PartitionedStore.frame(spark, path, schema, PartitionedStore.Pred)
 
   /** Delete EVERY fact about the given subjects (the usual takedown
     * unit): one masked scan of the store finds their live triples,
@@ -152,7 +147,7 @@ object TripleDb {
     * (spec-pinned). Load before and after are equivalent.
     */
   def compact(spark: SparkSession, path: String): Unit =
-    Tombstones.compactPartitioned(spark, path, Seq("s", "p", "o"), "pred")
+    Tombstones.compactPartitioned(spark, path, schema, PartitionedStore.Pred)
 
   /** Save as JSON-lines — one `{"s":{…},"p":{…},"o":{…}}` object per
     * line. Schema-exact interchange sink: JSON escaping handles any
@@ -170,24 +165,15 @@ object TripleDb {
   def loadJsonl(spark: SparkSession, path: String): TripleDb =
     TripleDb(spark.read.schema(schema).json(path))
 
-  /** Load a [[save]]d store, rebuilding the predicate index from the
-    * partition directories (slices prune partitions at scan time). */
+  /** Load a [[save]]d store: one slice per keyword-predicate partition
+    * directory (slices prune partitions at scan time), its on-disk
+    * bytes as the slice's stat, deleted-but-not-yet-compacted triples
+    * masked at read. Runs no Spark job: the cost is the partition
+    * listing ([[PartitionedStore]]). */
   def load(spark: SparkSession, path: String): TripleDb = {
-    val raw0 = spark.read.parquet(path)
-    // deleted-but-not-yet-compacted triples are masked at read
-    val raw = Tombstones.mask(spark, path, raw0, Seq("s", "p", "o"))
-    // metadata-only job: distinct values of a partition column
-    val preds = raw0.select("pred").distinct().collect()
-      .map(_.getString(0)).filter(_ != "__other")
-    val slices = preds.map { name =>
-      name -> raw.where(col("pred") === name).drop("pred")
-    }.toMap
-    // per-slice size after partition pruning — parquet metadata only
-    val stats = slices.map { case (name, slice) =>
-      name -> slice.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong
-    }
-    TripleDb(raw.drop("pred"), slices, stats)
+    val l = PartitionedStore.load[String](spark, path, schema,
+      PartitionedStore.Pred)(PartitionedStore.keywordPreds)
+    TripleDb(l.frame, l.slices, l.stats)
   }
 
   /** VoID-style dataset statistics (W3C "Vocabulary of Interlinked

@@ -291,10 +291,16 @@ object BgpCompiler {
     }
 
     // fully-ground patterns = existence gates (facts are deduped at
-    // index time, so each contributes a 0-or-1-row cross join);
+    // index time, so each contributes a 0-or-1-row cross join) — except
+    // a plain triple pattern over a quad store, which matches once per
+    // containing graph (QuadDb's bag-per-quad union semantics);
     // fully-ground paths gate on single-source reachability
+    val quadStore = in.full.columns.contains("g")
     val gates: Seq[DataFrame] =
-      groundOnly.map(pat => scanGround(in, sourceFor(in, pat), pat)) ++
+      groundOnly.map { pat =>
+        val hits = scanGround(in, sourceFor(in, pat), pat)
+        if (quadStore && pat.isInstanceOf[TriplePattern]) hits else hits.limit(1)
+      } ++
         groundPaths.map {
           case pp: PathPattern =>
             val (s, o) = (groundTerm(pp.s), groundTerm(pp.o))
@@ -310,9 +316,9 @@ object BgpCompiler {
                 allNodes(in.full.where(col("g") === in.groundLit(gt))))
               .where(col("dst") === in.groundLit(o))
           case other => throw new InvalidBgp(s"unexpected path row: $other")
-        }
+        }.map(_.limit(1))
     for ((g0, i) <- gates.zipWithIndex) {
-      val gate = g0.limit(1).select(functions.lit(1).as(s"__exists_$i"))
+      val gate = g0.select(functions.lit(1).as(s"__exists_$i"))
       acc = acc match {
         case None    => Some(gate)
         case Some(a) => Some(a.crossJoin(broadcast(gate)))
@@ -1950,8 +1956,9 @@ object BgpCompiler {
   /** Greedy selectivity ordering: start from the most-ground pattern, then
     * repeatedly take the pattern that shares the most already-bound vars
     * (connected join > cross join), tie-broken by ground-term count, then
-    * by SOURCE SIZE (per-predicate parquet-metadata stats from
-    * [[TripleDb.stats]] — a 5-row dimension slice scans before a 100 TB
+    * by SOURCE SIZE (per-predicate bytes from [[TripleDb.stats]]: a
+    * loaded store's on-disk parquet bytes per predicate partition, or a
+    * plan's size estimate — a 5-row dimension slice scans before a 100 TB
     * fact slice when boundness ties), then by original position (stable).
     * The reference runs patterns in user order (alpha.clj:193-203) and
     * tells users to put selective patterns first; we do it for them.

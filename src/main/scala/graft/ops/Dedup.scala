@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for LLM training-data pipelines, each
   * designed around its 100 TB shuffle shape:
@@ -191,7 +192,11 @@ object Dedup {
     // shared mask: broadcast anti-join for small tombstone sets, bloom
     // sidecar (scan-side prefilter) once the set outgrows a broadcast
     graft.core.Tombstones.mask(spark, path, spark.read.parquet(path),
-      Seq("id"))
+      IdKeys)
+
+  /** Tombstone keys of a minhash index: [[minhashIndexDelete]] writes
+    * the ids as longs, whatever the index's own id type. */
+  private val IdKeys = StructType(Seq(StructField("id", LongType)))
 
   private def tombPath(path: String): String =
     graft.core.Tombstones.tombPath(path)

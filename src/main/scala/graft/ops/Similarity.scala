@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -831,7 +832,7 @@ object Similarity {
     * it. `cell` stays the partition column under the mask. */
   def ivfPqLoadRaw(spark: SparkSession, path: String): DataFrame =
     graft.core.Tombstones.maskAt(spark, ivfPqTombPath(path),
-      spark.read.parquet(s"$path/raw"), Seq("vec_id"))
+      spark.read.parquet(s"$path/raw"), VecIdKeys)
 
   /** Load an [[ivfPqSaveIndex]] index: (codes, coarse, pqCents).
     * Centroid collects are bounded (|codebook| rows each). Searching
@@ -851,11 +852,16 @@ object Similarity {
     // cell stays the partition column under either shape, so the
     // coarse probe's partition pruning is unaffected
     val masked = graft.core.Tombstones.maskAt(
-      spark, ivfPqTombPath(path), codes, Seq("vec_id"))
+      spark, ivfPqTombPath(path), codes, VecIdKeys)
     (masked, readCents("coarse"), readCents("pq"))
   }
 
   private def ivfPqTombPath(path: String): String = s"$path/tombstones"
+
+  /** Tombstone keys of an IVF-PQ index: [[ivfPqDeleteIndex]] writes the
+    * ids as longs, whatever the index's own id type. */
+  private val VecIdKeys = StructType(Seq(StructField("vec_id", LongType)))
+
   private def ivfPqTombstonesExist(spark: SparkSession,
                                    path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(ivfPqTombPath(path))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{QuadDb, Term, Tombstones, TripleDb}
+import graft.core.{PartitionedStore, QuadDb, Term, Tombstones, TripleDb}
 import graft.dsl._
 import graft.engine.Projections
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -142,10 +142,6 @@ object Update {
   // Durable forms (saved predicate-partitioned stores; delta writes)
   // ---------------------------------------------------------------
 
-  private def predName: Column =
-    when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
-
   /** Durable `DELETE WHERE`: evaluates the WHERE against the LIVE
     * (masked) store and tombstones the matched facts — one tiny
     * append, nothing rewritten ([[TripleDb.deleteTriples]]'s GDPR
@@ -279,7 +275,7 @@ object Update {
     val novel = inserts.join(QuadDb.loadFrame(spark, path),
       Seq("s", "p", "o", "g"), "left_anti").localCheckpoint()
     if (!novel.isEmpty)
-      novel.withColumn("pred", predName)
+      novel.withColumn("pred", PartitionedStore.predValue)
         .write.mode("append").partitionBy("pred").parquet(path)
     freeCheckpoint(novel)
     spark.catalog.refreshByPath(path)
@@ -296,7 +292,7 @@ object Update {
     val novel = inserts.join(TripleDb.loadFrame(spark, path),
       Seq("s", "p", "o"), "left_anti").localCheckpoint()
     if (!novel.isEmpty)
-      novel.withColumn("pred", predName)
+      novel.withColumn("pred", PartitionedStore.predValue)
         .write.mode("append").partitionBy("pred").parquet(path)
     freeCheckpoint(novel)
     spark.catalog.refreshByPath(path)

@@ -31,9 +31,10 @@ import java.nio.charset.StandardCharsets.UTF_8
   * 400 naming the distributed writer, never a driver OOM.
   *
   * The store loads per request (masked read), so updates are visible
-  * to the next query — the simple-and-correct choice for a demo
-  * endpoint; a serving deployment would cache the load and invalidate
-  * on update.
+  * to the next query. No load cache is needed: a load runs no Spark
+  * job, only a partition listing ([[QuadDb.load]]), and a cache would
+  * also have to be invalidated by writers the endpoint never sees,
+  * such as [[QuadDb.compact]] rewriting files in place.
   */
 object Endpoint {
 

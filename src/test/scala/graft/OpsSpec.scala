@@ -1528,7 +1528,10 @@ class OpsSpec extends GraftSpec {
       assert(!sidecar(tombDir), "survivors below threshold skip the rebuild")
       // masked read still row-exact without a sidecar
       val live = Tombstones.maskAt(spark, tombDir,
-        spark.range(0, 300).select(col("id").as("k")), Seq("k"))
+        spark.range(0, 300).select(col("id").as("k")),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("k",
+            org.apache.spark.sql.types.LongType))))
         .collect().map(_.getLong(0)).toSet
       assert(live == ((0L until 20L) ++ (200L until 300L)).toSet,
         "mask over the gated set stays exact")

@@ -47,6 +47,10 @@ class QuadPathSpec extends GraftSpec {
     val sol = Projections.selectDf(d, Seq(pat(?("s"), T(knows), ?("o"))),
       Seq(?("s"), ?("o"))).collect()
     assert(sol.length == 4) // 4 distinct quads with p=knows
+    // a fully ground triple pattern too: the twin assertion gates the
+    // label pattern twice, once per containing graph
+    assert(Projections.selectDf(d, Seq(pat(T(katie), T(knows), T(julie)),
+      pat(T(rick), T(label), ?("l"))), Seq(?("l"))).collect().length == 2)
     // default-graph facts are in the nil graph
     assert(qset(d, Seq(?("x")),
       Seq(qpat(T(rick), T(label), ?("x"), T(QuadDb.DefaultGraph)))) ==

@@ -122,6 +122,41 @@ class UpdateSpec extends GraftSpec {
       afterSet - ((k("b"), cat, s("cold"))))
   }
 
+  test("durable stores whose predicate names all look like numbers or " +
+      "dates load them as string slices, answer queries, and keep the " +
+      "names through delete + compaction") {
+    for (names <- Seq(Seq("2024", "2025"), Seq("2024-01-01", "2024-02-01"),
+                      Seq("007", "1.50"))) {
+      val Seq(p1, p2) = names.map(k)
+      val facts = Seq((k("a"), p1, l(1)), (k("b"), p2, l(2)),
+        (k("c"), p2, l(3)))
+      val q = Seq(pat(V("x"), T(p2), V("v")))
+      val tmp = java.nio.file.Files.createTempDirectory("graft_numpred").toString
+      TripleDb.save(db(facts: _*), tmp)
+      val loaded = TripleDb.load(spark, tmp)
+      assert(loaded.predIndex.keySet == names.toSet, names)
+      assert(bag(loaded, Seq(V("x"), V("v")), q) ==
+        bag1(Seq(Seq(k("b"), l(2)), Seq(k("c"), l(3)))), names)
+      TripleDb.deleteTriples(db((k("b"), p2, l(2))).df, tmp)
+      TripleDb.compact(spark, tmp)
+      val compacted = TripleDb.load(spark, tmp)
+      assert(compacted.predIndex.keySet == names.toSet, names)
+      assert(bag(compacted, Seq(V("x"), V("v")), q) ==
+        bag1(Seq(Seq(k("c"), l(3)))), names)
+
+      val qtmp = java.nio.file.Files.createTempDirectory("graft_numpredq").toString
+      QuadDb.save(QuadDb.fromQuads(spark,
+        facts.map { case (s1, p, o) => (s1, p, o, TUri("g/1")) }), qtmp)
+      val qloaded = QuadDb.load(spark, qtmp)
+      assert(qloaded.predIndex.keySet == names.toSet, names)
+      assert(graft.engine.Projections.selectDf(qloaded,
+          Seq(QuadPattern(V("x"), T(p2), V("v"), V("g"))), Seq(V("x"), V("g")))
+        .collect().map(r => (Term.fromRow(r.getStruct(0)),
+          Term.fromRow(r.getStruct(1)))).toSet ==
+        Set((k("b"), TUri("g/1")), (k("c"), TUri("g/1"))), names)
+    }
+  }
+
   test("tombstone crash recovery: a swap interrupted between its two " +
       "renames leaves only _old — the next read renames it back, so " +
       "deleted facts stay masked (never resurrected)") {
