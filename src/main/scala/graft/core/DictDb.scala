@@ -123,30 +123,33 @@ object DictDb {
   /** [[encode]] for a quad store: four id columns, one dict over all
     * four positions, per-quad set semantics, the same LOUD collision
     * refusal. */
-  def encodeQuads(db: QuadDb): DictQuadDb = {
-    val df = db.df
-    val encRaw = df.select(idOf(col("s")).as("s"), idOf(col("p")).as("p"),
-      idOf(col("o")).as("o"), idOf(col("g")).as("g"))
-    val enc = (if (db.distinct) encRaw
-               else encRaw.dropDuplicates("s", "p", "o", "g")).persist()
-    val dict = df
-      .select(explode(array(col("s"), col("p"), col("o"), col("g"))).as("term"))
-      .dropDuplicates("term")
-      .select(idOf(col("term")).as("id"), col("term"))
-      .repartition(col("id"))
-      .persist()
+  def encodeQuads(db: QuadDb): DictQuadDb =
+    encodeWith(db.df, QuadIds, db.distinct, db.predIndex.keys, db.stats,
+      "QuadDb").quads
+
+  /** An encoded store of either layout. */
+  private final case class Built(rows: DataFrame, dict: DataFrame,
+                                 predIndex: Map[String, DataFrame],
+                                 stats: Map[String, Long]) {
+    def triples: DictDb = DictDb(rows, dict, predIndex, stats)
+    def quads: DictQuadDb = DictQuadDb(rows, dict, predIndex, stats)
+  }
+
+  private def sliced(enc: DataFrame, names: Iterable[String]): Map[String, DataFrame] =
+    names.map { name =>
+      name -> enc.where(col("p") === termId(Term.TKeyword(name)))
+    }.toMap
+
+  /** The LOUD collision refusal: an id the (id-clustered) dict maps to
+    * two terms would merge distinct terms, so the build frees its
+    * caches and throws. */
+  private def refuseCollisions(enc: DataFrame, dict: DataFrame,
+                               message: Long => String): Unit = {
     val collided = dict.groupBy("id").count().where(col("count") > 1).count()
     if (collided != 0) {
       enc.unpersist(); dict.unpersist()
-      throw new IllegalStateException(
-        s"xxhash64 term-id collision on $collided id(s) — dictionary " +
-          "encoding would merge distinct terms; use the struct-keyed " +
-          "QuadDb for this data")
+      throw new IllegalStateException(message(collided))
     }
-    val slices = db.predIndex.keys.map { name =>
-      name -> enc.where(col("p") === termId(Term.TKeyword(name)))
-    }.toMap
-    DictQuadDb(enc, dict, slices, db.stats)
   }
 
   /** ≙ `merge-dbs` (alpha.clj:728-746) for encoded stores: set union of
@@ -158,30 +161,28 @@ object DictDb {
     * an id still duplicated after that maps two distinct terms.
     * Slices/stats merge like [[TripleDb.merge]].
     */
-  def merge(dbs: DictDb*): DictDb = {
-    val enc = dbs.map(_.triples).reduce(_.unionByName(_))
-      .dropDuplicates("s", "p", "o").persist()
+  def merge(dbs: DictDb*): DictDb =
+    mergeWith(dbs.map(d => Built(d.triples, d.dict, d.predIndex, d.stats)),
+      TripleIds).triples
+
+  private def mergeWith(dbs: Seq[Built], ids: StructType): Built = {
+    val enc = dbs.map(_.rows).reduce(_.unionByName(_))
+      .dropDuplicates(ids.fieldNames.toSeq).persist()
     val dict = dbs.map(_.dict).reduce(_.unionByName(_))
       .dropDuplicates("id", "term")
       .repartition(col("id"))
       .persist()
-    val collided = dict.groupBy("id").count().where(col("count") > 1).count()
-    if (collided != 0) {
-      enc.unpersist(); dict.unpersist()
-      throw new IllegalStateException(
-        s"cross-store term-id collision on $collided id(s) — merged " +
-          "dictionaries would map one id to two distinct terms")
-    }
+    refuseCollisions(enc, dict, n =>
+      s"cross-store term-id collision on $n id(s) — merged " +
+        "dictionaries would map one id to two distinct terms")
     val slices =
       if (dbs.exists(_.predIndex.isEmpty)) Map.empty[String, DataFrame]
-      else dbs.flatMap(_.predIndex.keys).distinct.map { name =>
-        name -> enc.where(col("p") === termId(Term.TKeyword(name)))
-      }.toMap
+      else sliced(enc, dbs.flatMap(_.predIndex.keys).distinct)
     val stats =
       if (dbs.exists(_.stats.isEmpty)) Map.empty[String, Long]
       else dbs.flatMap(_.stats.toSeq).groupBy(_._1)
         .map { case (p, xs) => p -> xs.map(_._2).sum }
-    DictDb(enc, dict, slices, stats)
+    Built(enc, dict, slices, stats)
   }
 
   /** Term-struct column → 64-bit id. See the collision discussion in
@@ -242,42 +243,41 @@ object DictDb {
     * build fails LOUDLY at ingest, not as silently-merged query
     * results.
     */
-  def encode(db: TripleDb): DictDb = {
+  def encode(db: TripleDb): DictDb =
+    encodeWith(db.df, TripleIds, db.distinct, db.predIndex.keys, db.stats,
+      "TripleDb").triples
+
+  /** The encode body of both layouts: `df`'s term-struct columns named
+    * by `ids` become id columns, and one dict covers every position. */
+  private def encodeWith(df: DataFrame, ids: StructType, distinct: Boolean,
+                         preds: Iterable[String], stats: Map[String, Long],
+                         structStore: String): Built = {
     // NOT staged: an A/B showed caching the exploded struct triples for
     // the build's three passes costs more than the three source
     // scans+explodes it saves (columnar parquet + codegen'd explode is
     // cheaper to re-run than struct rows are to cache).
-    val df = db.df
+    val keys = ids.fieldNames.toSeq
     // A `distinct` source skips the set-semantics dedup: struct-distinct
     // triples map to id-distinct triples because the collision check
     // below proves term↔id is a bijection over every term in the store.
     // That dedup is a full shuffle of the fact table — the largest
     // single cost of ingest at scale (measured ~2× the hash+persist
     // itself at sf0.1).
-    val encRaw = df.select(idOf(col("s")).as("s"), idOf(col("p")).as("p"),
-      idOf(col("o")).as("o"))
-    val enc = (if (db.distinct) encRaw
-               else encRaw.dropDuplicates("s", "p", "o")).persist()
-    // one scan, not a 3-branch union: each union branch would re-run
-    // the source scan (for unpivoted stores, scan + explode) in full
+    val encRaw = df.select(keys.map(k => idOf(col(k)).as(k)): _*)
+    val enc = (if (distinct) encRaw else encRaw.dropDuplicates(keys)).persist()
+    // one scan, not a per-position union: each union branch would
+    // re-run the source scan (for unpivoted stores, scan + explode)
     val dict = df
-      .select(explode(array(col("s"), col("p"), col("o"))).as("term"))
+      .select(explode(array(keys.map(col): _*)).as("term"))
       .dropDuplicates("term")
       .select(idOf(col("term")).as("id"), col("term"))
       .repartition(col("id"))
       .persist()
-    val collided = dict.groupBy("id").count().where(col("count") > 1).count()
-    if (collided != 0) {
-      enc.unpersist(); dict.unpersist()
-      throw new IllegalStateException(
-        s"xxhash64 term-id collision on $collided id(s) — dictionary " +
-          "encoding would merge distinct terms; use the struct-keyed " +
-          "TripleDb for this data")
-    }
-    val slices = db.predIndex.keys.map { name =>
-      name -> enc.where(col("p") === termId(Term.TKeyword(name)))
-    }.toMap
-    DictDb(enc, dict, slices, db.stats)
+    refuseCollisions(enc, dict, n =>
+      s"xxhash64 term-id collision on $n id(s) — dictionary " +
+        "encoding would merge distinct terms; use the struct-keyed " +
+        s"$structStore for this data")
+    Built(enc, dict, sliced(enc, preds), stats)
   }
 
 
@@ -290,10 +290,13 @@ object DictDb {
     * at save time is the point.
     */
   def save(db: DictDb, path: String, dictTable: String,
-           buckets: Int = 32): Unit = {
-    db.triples.withColumn("pid", col("p"))
-      .write.mode("overwrite").partitionBy("pid").parquet(s"$path/triples")
-    db.dict.write.mode("overwrite").format("parquet")
+           buckets: Int = 32): Unit =
+    saveWith(db.triples, db.dict, path, "triples", dictTable, buckets)
+
+  private def saveWith(rows: DataFrame, dict: DataFrame, path: String,
+                       rowsDir: String, dictTable: String, buckets: Int): Unit = {
+    PartitionedStore.write(rows, s"$path/$rowsDir", PartitionedStore.Pid)
+    dict.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, "id").sortBy("id")
       .option("path", s"$path/dict").saveAsTable(dictTable)
   }
@@ -307,9 +310,8 @@ object DictDb {
     * the triples side).
     */
   def deleteTriples(triples: DataFrame, path: String): Unit =
-    Tombstones.append(
-      triples.select(col("s"), col("p"), col("o"), col("p").as("pid")),
-      s"$path/triples", keyCols = Seq("s", "p", "o"))
+    PartitionedStore.delete(triples, s"$path/triples", TripleIds,
+      PartitionedStore.Pid)
 
   /** Physically drop tombstoned triples, pruned to the affected
     * predicate-id partitions; only files holding a deleted triple are
@@ -324,11 +326,15 @@ object DictDb {
     * read bucketed. Costs one Spark job: the dict probe that names the
     * keyword predicate ids ([[keywordNames]]); the store read itself is
     * a partition listing ([[PartitionedStore]]). */
-  def load(spark: SparkSession, path: String, dictTable: String): DictDb = {
+  def load(spark: SparkSession, path: String, dictTable: String): DictDb =
+    loadWith(spark, s"$path/triples", TripleIds, dictTable).triples
+
+  private def loadWith(spark: SparkSession, rowsPath: String, ids: StructType,
+                       dictTable: String): Built = {
     val dict = spark.table(dictTable)
-    val l = PartitionedStore.load[Long](spark, s"$path/triples", TripleIds,
+    val l = PartitionedStore.load[Long](spark, rowsPath, ids,
       PartitionedStore.Pid)(keywordNames(dict))
-    DictDb(l.frame, dict, l.slices, l.stats)
+    Built(l.frame, dict, l.slices, l.stats)
   }
 
   /** Rows of the durable encoded stores: term ids. */
@@ -351,23 +357,16 @@ object DictDb {
   // bucketed+sorted on id so decode joins never shuffle the dict. ----
 
   def saveQuads(db: DictQuadDb, path: String, dictTable: String,
-                buckets: Int = 32): Unit = {
-    db.quads.withColumn("pid", col("p"))
-      .write.mode("overwrite").partitionBy("pid").parquet(s"$path/quads")
-    db.dict.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "id").sortBy("id")
-      .option("path", s"$path/dict").saveAsTable(dictTable)
-  }
+                buckets: Int = 32): Unit =
+    saveWith(db.quads, db.dict, path, "quads", dictTable, buckets)
 
   /** GDPR takedown on a [[saveQuads]]-durable store: the doomed encoded
     * quads (long columns s/p/o/g) append to the tombstone set; keys are
     * the full quad, so the same triple in another graph stays live.
     * Orphaned dict entries are harmless, as in [[deleteTriples]]. */
   def deleteQuadRows(quads: DataFrame, path: String): Unit =
-    Tombstones.append(
-      quads.select(col("s"), col("p"), col("o"), col("g"),
-        col("p").as("pid")),
-      s"$path/quads", keyCols = Seq("s", "p", "o", "g"))
+    PartitionedStore.delete(quads, s"$path/quads", QuadIds,
+      PartitionedStore.Pid)
 
   /** Physically drop tombstoned quads, pruned to affected predicate-id
     * partitions; only files holding a deleted quad are rewritten. */
@@ -377,38 +376,12 @@ object DictDb {
 
   /** Load a [[saveQuads]]d store (≙ [[load]]: one job, the dict probe). */
   def loadQuads(spark: SparkSession, path: String,
-                dictTable: String): DictQuadDb = {
-    val dict = spark.table(dictTable)
-    val l = PartitionedStore.load[Long](spark, s"$path/quads", QuadIds,
-      PartitionedStore.Pid)(keywordNames(dict))
-    DictQuadDb(l.frame, dict, l.slices, l.stats)
-  }
+                dictTable: String): DictQuadDb =
+    loadWith(spark, s"$path/quads", QuadIds, dictTable).quads
 
   /** [[merge]] for encoded quad stores: set union on the four 8-byte
     * ids, dict union with the same LOUD cross-store collision check. */
-  def mergeQuads(dbs: DictQuadDb*): DictQuadDb = {
-    val enc = dbs.map(_.quads).reduce(_.unionByName(_))
-      .dropDuplicates("s", "p", "o", "g").persist()
-    val dict = dbs.map(_.dict).reduce(_.unionByName(_))
-      .dropDuplicates("id", "term")
-      .repartition(col("id"))
-      .persist()
-    val collided = dict.groupBy("id").count().where(col("count") > 1).count()
-    if (collided != 0) {
-      enc.unpersist(); dict.unpersist()
-      throw new IllegalStateException(
-        s"cross-store term-id collision on $collided id(s) — merged " +
-          "dictionaries would map one id to two distinct terms")
-    }
-    val slices =
-      if (dbs.exists(_.predIndex.isEmpty)) Map.empty[String, DataFrame]
-      else dbs.flatMap(_.predIndex.keys).distinct.map { name =>
-        name -> enc.where(col("p") === termId(Term.TKeyword(name)))
-      }.toMap
-    val stats =
-      if (dbs.exists(_.stats.isEmpty)) Map.empty[String, Long]
-      else dbs.flatMap(_.stats.toSeq).groupBy(_._1)
-        .map { case (p, xs) => p -> xs.map(_._2).sum }
-    DictQuadDb(enc, dict, slices, stats)
-  }
+  def mergeQuads(dbs: DictQuadDb*): DictQuadDb =
+    mergeWith(dbs.map(d => Built(d.quads, d.dict, d.predIndex, d.stats)),
+      QuadIds).quads
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** The one read path of the durable `partitionBy` stores
+/** The one read and write path of the durable `partitionBy` stores
   * ([[TripleDb.save]], [[QuadDb.save]], [[DictDb.save]],
   * [[DictDb.saveQuads]]). Reading a store runs no Spark job (past
   * `spark.sql.sources.parallelPartitionDiscovery.threshold`, 32
@@ -59,6 +59,34 @@ private[graft] object PartitionedStore {
             part: StructField): DataFrame =
     Tombstones.mask(spark, path, raw(spark, path, schema, part), schema)
       .drop(part.name)
+
+  /** A row's partition value: [[predValue]] for [[Pred]], the
+    * predicate id `p` for [[Pid]]. */
+  private def partValue(part: StructField): Column =
+    if (part == Pred) predValue else col("p")
+
+  /** Write `rows` partitioned by `part` (`mode` "overwrite" saves a
+    * store, "append" adds to one). */
+  def write(rows: DataFrame, path: String, part: StructField,
+            mode: String = "overwrite"): Unit =
+    rows.withColumn(part.name, partValue(part))
+      .write.mode(mode).partitionBy(part.name).parquet(path)
+
+  /** Tombstone `rows` (their `schema` columns are the keys) with the
+    * partition value that lets compaction prune. Nothing in the store
+    * is rewritten. */
+  def delete(rows: DataFrame, path: String, schema: StructType,
+             part: StructField): Unit =
+    Tombstones.append(
+      rows.select(schema.fieldNames.map(col) :+ partValue(part).as(part.name): _*),
+      path, keyCols = schema.fieldNames.toSeq)
+
+  /** Tombstone every live row whose `s` is in `subjects`: one masked
+    * scan of the store. */
+  def deleteSubjects(spark: SparkSession, path: String, schema: StructType,
+                     part: StructField, subjects: DataFrame): Unit =
+    delete(frame(spark, path, schema, part)
+      .join(subjects.select("s"), Seq("s"), "left_semi"), path, schema, part)
 
   /** The live rows plus a slice per partition that `names` names;
     * `names` gets every non-empty partition value (a `String` for

@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** A quad database: a DataFrame with columns `s`, `p`, `o`, `g`, each a
   * [[Term]] struct — the named-graph extension of [[TripleDb]].
@@ -85,11 +85,8 @@ final case class QuadDb(df: DataFrame,
 }
 
 object QuadDb {
-  val schema: StructType = StructType(Seq(
-    StructField("s", Term.schema, nullable = false),
-    StructField("p", Term.schema, nullable = false),
-    StructField("o", Term.schema, nullable = false),
-    StructField("g", Term.schema, nullable = false)))
+  /** [[TripleDb.schema]] plus the graph key `g`. */
+  val schema: StructType = TripleDb.schema.add("g", Term.schema, nullable = false)
 
   /** The default graph's name: term-nil (an N-Quads line with no graph
     * label parses here, and quads in this graph serialize without one). */
@@ -139,10 +136,8 @@ object QuadDb {
     * [[TripleDb.save]] — ground-predicate scans prune to one partition
     * directory; the graph column rides along and graph scoping remains
     * a pushed filter. */
-  def save(db: QuadDb, path: String): Unit = {
-    db.df.withColumn("pred", PartitionedStore.predValue)
-      .write.mode("overwrite").partitionBy("pred").parquet(path)
-  }
+  def save(db: QuadDb, path: String): Unit =
+    PartitionedStore.write(db.df, path, PartitionedStore.Pred)
 
   /** The masked quad FRAME of a [[save]]d store, without slices or
     * stats — the mutation-internal read ([[graft.ops.Update]] /
@@ -180,21 +175,16 @@ object QuadDb {
     * quads; [[compact]] reclaims the space physically. Keys are the
     * full quad: the same triple asserted in another graph is a
     * different fact and stays live. */
-  def deleteQuads(quads: DataFrame, path: String): Unit = {
-    Tombstones.append(
-      quads.select(col("s"), col("p"), col("o"), col("g"),
-        PartitionedStore.predValue.as("pred")),
-      path, keyCols = Seq("s", "p", "o", "g"))
-  }
+  def deleteQuads(quads: DataFrame, path: String): Unit =
+    PartitionedStore.delete(quads, path, schema, PartitionedStore.Pred)
 
   /** Delete EVERY fact about the given subjects across ALL graphs (the
     * takedown unit of [[TripleDb.deleteSubjects]], extended to the
     * union dataset). `subjects` needs a Term-struct column `s`. */
   def deleteSubjects(spark: SparkSession, path: String,
                      subjects: DataFrame): Unit =
-    deleteQuads(
-      loadFrame(spark, path).join(subjects.select("s"), Seq("s"), "left_semi"),
-      path)
+    PartitionedStore.deleteSubjects(spark, path, schema,
+      PartitionedStore.Pred, subjects)
 
   /** Delete a whole named graph — the takedown unit quads ADD over
     * triples (a tenant / source / crawl-snapshot graph). One masked

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Shared tombstone + partition-pruned-compaction machinery for the
-  * durable stores ([[TripleDb]], [[DictDb]]) — the same GDPR contract
-  * the near-dup / IVF-PQ indexes already carry: a delete appends a tiny
-  * tombstone file set (nothing in the store is rewritten), loads mask
-  * tombstoned rows, and compaction physically rewrites ONLY the parquet
-  * files that hold at least one deleted row. Untouched partition
+  * durable stores ([[TripleDb]], [[QuadDb]], [[DictDb]]) — the same
+  * GDPR contract the near-dup / IVF-PQ indexes already carry: a delete
+  * appends a tiny tombstone file set (nothing in the store is
+  * rewritten), loads mask tombstoned rows, and compaction physically
+  * rewrites ONLY the parquet files that hold at least one deleted
+  * row. Untouched partition
   * directories — and untouched files inside affected partitions — are
   * never read-modified-written, so at 100 TB a takedown costs the
   * affected tenant's files, not the corpus.
@@ -66,16 +67,19 @@ private[graft] object Tombstones {
 
   /** Hadoop `FileSystem.rename` signals most failures by returning
     * FALSE, not throwing — an unchecked rename in the tombstone swap
-    * silently skips the step and later loads resurrect deleted facts.
-    * Every swap rename goes through this loud wrapper. */
+    * silently skips the step and later loads resurrect deleted facts,
+    * and one in compaction silently drops a rewritten file's live
+    * rows. Every swap and compaction rename goes through this loud
+    * wrapper; `state` says what the failure left behind. */
   private def renameOrDie(fs: org.apache.hadoop.fs.FileSystem,
                           src: org.apache.hadoop.fs.Path,
-                          dst: org.apache.hadoop.fs.Path): Unit =
+                          dst: org.apache.hadoop.fs.Path,
+                          state: String = "the tombstone set was NOT " +
+                            "modified"): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(
-        s"tombstone swap rename failed: $src -> $dst (filesystem " +
-          "returned false); the tombstone set was NOT modified — " +
-          "resolve the target path collision and retry")
+        s"rename failed: $src -> $dst (filesystem returned false); " +
+          s"$state — resolve the target path collision and retry")
 
   /** Append tombstone rows (whatever key columns the store joins on,
     * plus its partition column for pruned compaction) and refresh the
@@ -358,6 +362,9 @@ private[graft] object Tombstones {
     * store is read with its known schema ([[PartitionedStore.raw]]), so
     * a rewritten partition keeps its exact name — an inferred `pred`
     * would turn `007` into `7`. Clears the tombstone set at the end.
+    * A failed move into the store throws ([[renameOrDie]]) and keeps
+    * both the staging directory, which holds the affected files' live
+    * rows, and the tombstone set.
     */
   def compactPartitioned(spark: SparkSession, store: String,
                          schema: StructType, part: StructField): Unit = {
@@ -399,8 +406,10 @@ private[graft] object Tombstones {
           fs.mkdirs(dest)
           fs.listStatus(d.getPath).foreach { st =>
             if (st.getPath.getName.endsWith(".parquet"))
-              fs.rename(st.getPath,
-                new org.apache.hadoop.fs.Path(dest, st.getPath.getName))
+              renameOrDie(fs, st.getPath,
+                new org.apache.hadoop.fs.Path(dest, st.getPath.getName),
+                s"the rewritten rows not yet moved are in $staging and " +
+                  "the tombstone set is kept")
           }
         }
       }

@@ -89,10 +89,8 @@ object TripleDb {
     * predicate index: a ground-predicate pattern scan prunes to one
     * partition directory instead of touching the whole store.
     */
-  def save(db: TripleDb, path: String): Unit = {
-    db.df.withColumn("pred", PartitionedStore.predValue)
-      .write.mode("overwrite").partitionBy("pred").parquet(path)
-  }
+  def save(db: TripleDb, path: String): Unit =
+    PartitionedStore.write(db.df, path, PartitionedStore.Pred)
 
   /** Subject-bucketed durable store: writes the triple table bucketed
     * (and sorted) by the encoded subject. BGP conjunctions join
@@ -116,12 +114,8 @@ object TripleDb {
     * The tombstones carry the predicate partition value so compaction
     * prunes to the affected `pred=` directories.
     */
-  def deleteTriples(triples: DataFrame, path: String): Unit = {
-    Tombstones.append(
-      triples.select(col("s"), col("p"), col("o"),
-        PartitionedStore.predValue.as("pred")), path,
-      keyCols = Seq("s", "p", "o"))
-  }
+  def deleteTriples(triples: DataFrame, path: String): Unit =
+    PartitionedStore.delete(triples, path, schema, PartitionedStore.Pred)
 
   /** The masked triple FRAME of a [[save]]d store, without slices or
     * stats — the mutation-internal read (≙ [[QuadDb.loadFrame]]) for
@@ -137,9 +131,8 @@ object TripleDb {
     */
   def deleteSubjects(spark: SparkSession, path: String,
                      subjects: DataFrame): Unit =
-    deleteTriples(
-      loadFrame(spark, path).join(subjects.select("s"), Seq("s"), "left_semi"),
-      path)
+    PartitionedStore.deleteSubjects(spark, path, schema,
+      PartitionedStore.Pred, subjects)
 
   /** Physically drop tombstoned triples: only the affected predicate
     * partitions are scanned and only files holding a deleted triple are

@@ -528,38 +528,41 @@ object Projections {
   def constructQuads(db: TripleDb,
                      templates: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)],
                      rows: Seq[PatternRow]): QuadDb =
-    constructQuadsFrom(selectDf(db, rows, quadTemplateVars(templates)),
-      templates)
+    constructQuadsFrom(selectDf(db, rows, rowVars(cells(templates))), templates)
 
   /** [[constructQuads]] reading FROM a quad store (e.g. re-grouping
     * one dataset's facts into different graphs). */
   def constructQuads(db: QuadDb,
                      templates: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)],
                      rows: Seq[PatternRow]): QuadDb =
-    constructQuadsFrom(selectDf(db, rows, quadTemplateVars(templates)),
-      templates)
-
-  private def quadTemplateVars(
-      templates: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)]): Seq[V] = {
-    require(templates.nonEmpty, "constructQuads needs >= 1 template")
-    templates.flatMap(t => Seq(t._1, t._2, t._3, t._4)
-      .collect { case v: V => v }).distinct
-  }
+    constructQuadsFrom(selectDf(db, rows, rowVars(cells(templates))), templates)
 
   private def constructQuadsFrom(sol: DataFrame,
-      templates: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)]): QuadDb = {
+      templates: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)]): QuadDb =
+    QuadDb(instantiateRows(sol, QuadDb.schema.fieldNames.toSeq, cells(templates)),
+      distinct = true)
+
+  private[graft] def cells(templates: Seq[Product]): Seq[Seq[TermOrVar]] =
+    templates.map(_.productIterator.map(_.asInstanceOf[TermOrVar]).toSeq)
+
+  private[graft] def rowVars(templates: Seq[Seq[TermOrVar]]): Seq[V] =
+    templates.flatten.collect { case v: V => v }.distinct
+
+  /** Template rows instantiated onto the key columns `keys` (one
+    * position per key), per solution of `sol`: one narrow select per
+    * template, union, per-row dedup. A row leaving any position unbound
+    * instantiates nothing (SPARQL §16.2). */
+  private[graft] def instantiateRows(sol: DataFrame, keys: Seq[String],
+                                     templates: Seq[Seq[TermOrVar]]): DataFrame = {
+    require(templates.nonEmpty, "need >= 1 template")
     def colOf(tv: TermOrVar): Column = tv match {
       case v: V => col(v.name)
       case T(t) => Term.lit(t)
     }
-    val frames = templates.map { t =>
-      sol.select(colOf(t._1).as("s"), colOf(t._2).as("p"),
-          colOf(t._3).as("o"), colOf(t._4).as("g"))
-        .where(col("s").isNotNull && col("p").isNotNull &&
-          col("o").isNotNull && col("g").isNotNull)
-    }
-    QuadDb(frames.reduce(_.unionByName(_)).dropDuplicates("s", "p", "o", "g"),
-      distinct = true)
+    templates.map { t =>
+      sol.select(t.zip(keys).map { case (tv, k) => colOf(tv).as(k) }: _*)
+        .where(keys.map(col(_).isNotNull).reduce(_ && _))
+    }.reduce(_.unionByName(_)).dropDuplicates(keys)
   }
 
   /** DESCRIBE (SPARQL §16.4) — the fourth result form, completing

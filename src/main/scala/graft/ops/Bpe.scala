@@ -174,22 +174,6 @@ object Bpe {
     merges.toSeq
   }
 
-  /** Drop a localCheckpoint'd frame's cached blocks. An unpersisted
-    * local checkpoint CANNOT be recomputed (its lineage is truncated by
-    * design), so this is only called on frames provably dead: the loop
-    * predecessor after its successor's EAGER checkpoint materialized,
-    * and the final dict once the merge list (plain driver data) is out.
-    * Without this, every iteration leaks one cached copy of the dict —
-    * bounded at 16 merges, but a real 32k-100k-merge tokenizer build
-    * would pin tens of GB of dead blocks in the block manager.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
-
   /** The per-iteration body of [[learnMergesDistributed]] — runs with
     * the caller's (temporarily dict-sized) shuffle parallelism. */
   private def learnLoop(seg0: DataFrame, numMerges: Int,

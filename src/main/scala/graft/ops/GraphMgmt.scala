@@ -136,9 +136,8 @@ object GraphMgmt {
                format: String, g: Term = QuadDb.DefaultGraph): Unit = {
     val quads = readTriples(spark, file, format).df
       .select("s", "p", "o").withColumn("g", Term.lit(g))
-      .localCheckpoint() // lineage cut: the resurrection step below
-                         // rewrites the tombstone set mid-flight
-    Update.appendNovelQuads(spark, path, quads)
+      .localCheckpoint() // parse once: the append tail reads it twice
+    Update.appendNovel(spark, path, QuadDb.schema, quads)
     freeCheckpoint(quads)
   }
 
@@ -149,16 +148,11 @@ object GraphMgmt {
     * would mint an EMPTY tombstone set, and every later load of the
     * store would pay the mask anti-join for nothing (one limit-1 job
     * here buys it back permanently — the common COPY-into-fresh-graph
-    * case hits this on its destination clear). */
+    * case hits this on its destination clear). The probe and the
+    * append share one masked read of the store. */
   def clearGraph(spark: SparkSession, path: String, g: Term): Unit = {
-    import org.apache.spark.sql.functions.col
-    val doomed = QuadDb.loadFrame(spark, path)
-      .where(col("g") === Term.lit(g))
-    if (doomed.limit(1).isEmpty) return
-    // same frame feeds the tombstone append — [[QuadDb.deleteGraph]]
-    // would re-load the store (slice/stats build) for the identical
-    // filter (round-15: one masked read serves probe and delete)
-    QuadDb.deleteQuads(doomed, path)
+    val doomed = QuadDb.loadFrame(spark, path).where(col("g") === Term.lit(g))
+    if (!doomed.limit(1).isEmpty) QuadDb.deleteQuads(doomed, path)
   }
 
   /** Durable `DROP GRAPH g` — same operation (see the class note). */
@@ -183,7 +177,7 @@ object GraphMgmt {
     if (from == to) return
     val src = retagged(QuadDb.loadFrame(spark, path), from, to)
       .localCheckpoint()
-    Update.appendNovelQuads(spark, path, src)
+    Update.appendNovel(spark, path, QuadDb.schema, src)
     freeCheckpoint(src)
   }
 
@@ -196,7 +190,7 @@ object GraphMgmt {
     val src = retagged(QuadDb.loadFrame(spark, path), from, to)
       .localCheckpoint()
     clearGraph(spark, path, to)
-    Update.appendNovelQuads(spark, path, src)
+    Update.appendNovel(spark, path, QuadDb.schema, src)
     freeCheckpoint(src)
   }
 
@@ -219,11 +213,10 @@ object GraphMgmt {
     * source snapshot excludes every row the append just landed. */
   def moveGraph(spark: SparkSession, path: String, from: Term,
                 to: Term): Unit = {
-    import org.apache.spark.sql.functions.col
     if (from == to) return
     val src = retagged(QuadDb.loadFrame(spark, path), from, to)
       .localCheckpoint()
-    Update.appendNovelQuads(spark, path, src)
+    Update.appendNovel(spark, path, QuadDb.schema, src)
     val liveAfter = QuadDb.loadFrame(spark, path)
     val doomed = liveAfter.where(col("g") === Term.lit(to))
         .join(src, Seq("s", "p", "o", "g"), "left_anti")
@@ -233,11 +226,4 @@ object GraphMgmt {
     if (!doomed.limit(1).isEmpty) QuadDb.deleteQuads(doomed, path)
     freeCheckpoint(src)
   }
-
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 }

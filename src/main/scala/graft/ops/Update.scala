@@ -1,10 +1,10 @@
 package graft.ops
 
-import graft.core.{PartitionedStore, QuadDb, Term, Tombstones, TripleDb}
+import graft.core.{PartitionedStore, QuadDb, Tombstones, TripleDb}
 import graft.dsl._
 import graft.engine.Projections
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Query-driven mutation (SPARQL-Update-shaped, §3.1.3 DELETE/INSERT):
   * INSERT WHERE / DELETE WHERE as compositions of the existing pieces
@@ -40,26 +40,18 @@ object Update {
     * union, per-fact dedup; rows with an unbound position drop). */
   def constructTriples(db: TripleDb,
       templates: Seq[(TermOrVar, TermOrVar, TermOrVar)],
-      where: Seq[PatternRow]): DataFrame = {
-    require(templates.nonEmpty, "need >= 1 template")
-    val vars = templates.flatMap(t => Seq(t._1, t._2, t._3)
-      .collect { case v: V => v }).distinct
-    instantiate(Projections.selectDf(db, where, vars), templates)
-  }
+      where: Seq[PatternRow]): DataFrame =
+    instantiate(Projections.selectDf(db, where, varsOf(templates)),
+      TripleDb.schema, templates)
 
-  private def instantiate(sol: DataFrame,
-      templates: Seq[(TermOrVar, TermOrVar, TermOrVar)]): DataFrame = {
-    def colOf(tv: TermOrVar): Column = tv match {
-      case v: V => col(v.name)
-      case T(t) => Term.lit(t)
-    }
-    templates.map { t =>
-      sol.select(colOf(t._1).as("s"), colOf(t._2).as("p"),
-          colOf(t._3).as("o"))
-        .where(col("s").isNotNull && col("p").isNotNull &&
-          col("o").isNotNull)
-    }.reduce(_.unionByName(_)).dropDuplicates("s", "p", "o")
-  }
+  /** Tuple templates onto the key columns of `schema`. */
+  private def instantiate(sol: DataFrame, schema: StructType,
+                          templates: Seq[Product]): DataFrame =
+    Projections.instantiateRows(sol, schema.fieldNames.toSeq,
+      Projections.cells(templates))
+
+  private def varsOf(templates: Seq[Product]): Seq[V] =
+    Projections.rowVars(Projections.cells(templates))
 
   // ---------------------------------------------------------------
   // Value forms (in-memory stores → new stores; inputs untouched)
@@ -89,8 +81,11 @@ object Update {
     * rebuild via `TripleDb(deleteWhere(db, …).df)`. */
   def deleteWhere(db: TripleDb,
       templates: Seq[(TermOrVar, TermOrVar, TermOrVar)],
-      where: Seq[PatternRow]): TripleDb = {
-    val doomed = constructTriples(db, templates, where)
+      where: Seq[PatternRow]): TripleDb =
+    without(db, constructTriples(db, templates, where))
+
+  /** `db` minus `doomed`, in the full relation and every slice. */
+  private def without(db: TripleDb, doomed: DataFrame): TripleDb = {
     def anti(d: DataFrame): DataFrame =
       d.join(doomed, Seq("s", "p", "o"), "left_anti")
     TripleDb(anti(db.df), db.predIndex.map { case (n, d) => n -> anti(d) },
@@ -107,17 +102,9 @@ object Update {
       deleteTs: Seq[(TermOrVar, TermOrVar, TermOrVar)],
       insertTs: Seq[(TermOrVar, TermOrVar, TermOrVar)],
       where: Seq[PatternRow]): TripleDb = {
-    val vars = (deleteTs ++ insertTs).flatMap(t => Seq(t._1, t._2, t._3)
-      .collect { case v: V => v }).distinct
-    val sol = Projections.selectDf(db, where, vars)
-    val doomed = instantiate(sol, deleteTs)
-    val inserts = instantiate(sol, insertTs)
-    def anti(d: DataFrame): DataFrame =
-      d.join(doomed, Seq("s", "p", "o"), "left_anti")
-    TripleDb.merge(
-      TripleDb(anti(db.df), db.predIndex.map { case (n, d) => n -> anti(d) },
-        db.stats, distinct = db.distinct),
-      TripleDb(inserts))
+    val sol = Projections.selectDf(db, where, varsOf(deleteTs ++ insertTs))
+    TripleDb.merge(without(db, instantiate(sol, TripleDb.schema, deleteTs)),
+      TripleDb(instantiate(sol, TripleDb.schema, insertTs)))
   }
 
   /** Quad-store INSERT WHERE: [[Projections.constructQuads]] (the
@@ -139,8 +126,24 @@ object Update {
   }
 
   // ---------------------------------------------------------------
-  // Durable forms (saved predicate-partitioned stores; delta writes)
+  // Durable forms (saved predicate-partitioned stores; delta writes).
+  // One body per op shape serves both layouts: a [[Durable]] names
+  // the store's key schema, its live (masked) frame and its WHERE
+  // solver.
   // ---------------------------------------------------------------
+
+  private final case class Durable(schema: StructType, live: DataFrame,
+                                   solve: (Seq[PatternRow], Seq[V]) => DataFrame)
+
+  private def triples(spark: SparkSession, path: String): Durable = {
+    val db = TripleDb.load(spark, path)
+    Durable(TripleDb.schema, db.df, Projections.selectDf(db, _, _))
+  }
+
+  private def quads(spark: SparkSession, path: String): Durable = {
+    val db = QuadDb.load(spark, path)
+    Durable(QuadDb.schema, db.df, Projections.selectDf(db, _, _))
+  }
 
   /** Durable `DELETE WHERE`: evaluates the WHERE against the LIVE
     * (masked) store and tombstones the matched facts — one tiny
@@ -149,12 +152,8 @@ object Update {
     * become tombstones (the semi-join keeps the tombstone set tight). */
   def deleteWhere(spark: SparkSession, path: String,
       templates: Seq[(TermOrVar, TermOrVar, TermOrVar)],
-      where: Seq[PatternRow]): Unit = {
-    val db = TripleDb.load(spark, path)
-    val doomed = constructTriples(db, templates, where)
-      .join(db.df, Seq("s", "p", "o"), "left_semi")
-    TripleDb.deleteTriples(doomed, path)
-  }
+      where: Seq[PatternRow]): Unit =
+    delete(path, triples(spark, path), templates, where)
 
   /** Durable `INSERT WHERE`: instantiates against the live store,
     * resurrects any tombstoned facts being re-asserted (their
@@ -163,17 +162,8 @@ object Update {
     * predicate-partitioned layout. */
   def insertWhere(spark: SparkSession, path: String,
       templates: Seq[(TermOrVar, TermOrVar, TermOrVar)],
-      where: Seq[PatternRow]): Unit = {
-    val db = TripleDb.load(spark, path)
-    // eager localCheckpoint, NOT persist: the resurrection step
-    // rewrites the tombstone set and refreshByPath INVALIDATES cached
-    // plans that read it — a persisted frame would silently RECOMPUTE
-    // against post-mutation state (caught by UpdateSpec's quad leg).
-    // Cutting lineage pins the pre-mutation solutions physically.
-    val inserts = constructTriples(db, templates, where).localCheckpoint()
-    appendNovel(spark, path, inserts)
-    freeCheckpoint(inserts)
-  }
+      where: Seq[PatternRow]): Unit =
+    insert(spark, path, triples(spark, path), templates, where)
 
   /** Durable §3.1.3 `DELETE/INSERT WHERE`: one solution set against
     * the pre-mutation live store; tombstones first, then resurrection
@@ -182,129 +172,92 @@ object Update {
   def deleteInsertWhere(spark: SparkSession, path: String,
       deleteTs: Seq[(TermOrVar, TermOrVar, TermOrVar)],
       insertTs: Seq[(TermOrVar, TermOrVar, TermOrVar)],
-      where: Seq[PatternRow]): Unit = {
-    val db = TripleDb.load(spark, path)
-    val vars = (deleteTs ++ insertTs).flatMap(t => Seq(t._1, t._2, t._3)
-      .collect { case v: V => v }).distinct
-    // one eager lineage cut pins the PRE-mutation solutions (see
-    // insertWhere's note); both template sets instantiate from it
-    val sol = Projections.selectDf(db, where, vars).localCheckpoint()
-    val doomed = instantiate(sol, deleteTs)
-      .join(db.df, Seq("s", "p", "o"), "left_semi").localCheckpoint()
-    val inserts = instantiate(sol, insertTs).localCheckpoint()
-    TripleDb.deleteTriples(doomed, path)
-    appendNovel(spark, path, inserts)
-    freeCheckpoint(sol); freeCheckpoint(doomed); freeCheckpoint(inserts)
-  }
+      where: Seq[PatternRow]): Unit =
+    deleteInsert(spark, path, triples(spark, path), deleteTs, insertTs, where)
 
-  /** Quad-store durable DELETE WHERE (graph-aware redaction). */
+  /** Quad-store durable DELETE WHERE (graph-aware redaction; keys are
+    * full quads). */
   def deleteWhereQuads(spark: SparkSession, path: String,
       templates: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)],
-      where: Seq[PatternRow]): Unit = {
-    val db = QuadDb.load(spark, path)
-    val doomed = Projections.constructQuads(db, templates, where).df
-      .join(db.df, Seq("s", "p", "o", "g"), "left_semi")
-    QuadDb.deleteQuads(doomed, path)
-  }
+      where: Seq[PatternRow]): Unit =
+    delete(path, quads(spark, path), templates, where)
 
-  /** Quad-store durable INSERT WHERE: instantiates against the live
-    * dataset, resurrects re-asserted tombstoned quads (keys are full
-    * quads), appends only novel ones — the graph-aware twin of the
-    * triple form, so the durable lifecycle is symmetric across both
+  /** Quad-store durable INSERT WHERE: [[insertWhere]] with graph-aware
+    * templates, so the durable lifecycle is symmetric across both
     * layouts. */
   def insertWhereQuads(spark: SparkSession, path: String,
       templates: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)],
-      where: Seq[PatternRow]): Unit = {
-    val db = QuadDb.load(spark, path)
-    // lineage cut before the tombstone rewrite (see insertWhere's note)
-    val inserts = Projections.constructQuads(db, templates, where)
-      .df.localCheckpoint()
-    appendNovelQuads(spark, path, inserts)
-    freeCheckpoint(inserts)
-  }
+      where: Seq[PatternRow]): Unit =
+    insert(spark, path, quads(spark, path), templates, where)
 
   /** Durable quad-store §3.1.3 `DELETE { d } INSERT { i } WHERE { g }`:
-    * ONE pre-mutation solution set drives both template sets (the
-    * triple form's semantics with graph-aware templates — positions
-    * including the GRAPH may be vars bound by the WHERE). Tombstones
-    * first, then resurrection + novel append, so a quad in both sets
-    * ends up present. */
+    * [[deleteInsertWhere]] with graph-aware templates — positions
+    * including the GRAPH may be vars bound by the WHERE. */
   def deleteInsertWhereQuads(spark: SparkSession, path: String,
       deleteTs: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)],
       insertTs: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)],
-      where: Seq[PatternRow]): Unit = {
-    val db = QuadDb.load(spark, path)
-    val vars = (deleteTs ++ insertTs)
-      .flatMap(t => Seq(t._1, t._2, t._3, t._4)
-        .collect { case v: V => v }).distinct
-    // one eager lineage cut pins the PRE-mutation solutions
-    val sol = Projections.selectDf(db, where, vars).localCheckpoint()
-    val doomed = instantiateQuads(sol, deleteTs)
-      .join(db.df, Seq("s", "p", "o", "g"), "left_semi").localCheckpoint()
-    val inserts = instantiateQuads(sol, insertTs).localCheckpoint()
-    QuadDb.deleteQuads(doomed, path)
-    appendNovelQuads(spark, path, inserts)
+      where: Seq[PatternRow]): Unit =
+    deleteInsert(spark, path, quads(spark, path), deleteTs, insertTs, where)
+
+  private def delete(path: String, store: Durable, templates: Seq[Product],
+                     where: Seq[PatternRow]): Unit = {
+    val doomed = instantiate(store.solve(where, varsOf(templates)),
+        store.schema, templates)
+      .join(store.live, store.schema.fieldNames.toSeq, "left_semi")
+    PartitionedStore.delete(doomed, path, store.schema, PartitionedStore.Pred)
+  }
+
+  private def insert(spark: SparkSession, path: String, store: Durable,
+                     templates: Seq[Product], where: Seq[PatternRow]): Unit = {
+    // eager localCheckpoint, NOT persist: the resurrection step
+    // rewrites the tombstone set and refreshByPath INVALIDATES cached
+    // plans that read it — a persisted frame would silently RECOMPUTE
+    // against post-mutation state (caught by UpdateSpec's quad leg).
+    // Cutting lineage pins the pre-mutation solutions physically.
+    val inserts = instantiate(store.solve(where, varsOf(templates)),
+      store.schema, templates).localCheckpoint()
+    appendNovel(spark, path, store.schema, inserts)
+    freeCheckpoint(inserts)
+  }
+
+  private def deleteInsert(spark: SparkSession, path: String, store: Durable,
+                           deleteTs: Seq[Product], insertTs: Seq[Product],
+                           where: Seq[PatternRow]): Unit = {
+    // one eager lineage cut pins the PRE-mutation solutions (see
+    // insert's note); both template sets instantiate from it
+    val sol = store.solve(where, varsOf(deleteTs ++ insertTs)).localCheckpoint()
+    val doomed = instantiate(sol, store.schema, deleteTs)
+      .join(store.live, store.schema.fieldNames.toSeq, "left_semi")
+      .localCheckpoint()
+    val inserts = instantiate(sol, store.schema, insertTs).localCheckpoint()
+    PartitionedStore.delete(doomed, path, store.schema, PartitionedStore.Pred)
+    appendNovel(spark, path, store.schema, inserts)
     freeCheckpoint(sol); freeCheckpoint(doomed); freeCheckpoint(inserts)
   }
 
-  private def instantiateQuads(sol: DataFrame,
-      templates: Seq[(TermOrVar, TermOrVar, TermOrVar, TermOrVar)]): DataFrame = {
-    def colOf(tv: TermOrVar): Column = tv match {
-      case v: V => col(v.name)
-      case T(t) => Term.lit(t)
-    }
-    templates.map { t =>
-      sol.select(colOf(t._1).as("s"), colOf(t._2).as("p"),
-          colOf(t._3).as("o"), colOf(t._4).as("g"))
-        .where(col("s").isNotNull && col("p").isNotNull &&
-          col("o").isNotNull && col("g").isNotNull)
-    }.reduce(_.unionByName(_)).dropDuplicates("s", "p", "o", "g")
-  }
-
-  /** Resurrect re-asserted tombstoned quads, then append only the
-    * genuinely novel ones into the predicate-partitioned layout — the
-    * shared durable-insert tail ([[GraphMgmt]]'s LOAD/ADD/COPY use it
-    * too). `inserts` must be LINEAGE-CUT by the caller (an eager
-    * localCheckpoint): the resurrection step rewrites the tombstone
-    * set, and an uncut frame would silently recompute against
-    * post-mutation state. */
-  private[graft] def appendNovelQuads(spark: SparkSession, path: String,
-                                      inserts: DataFrame): Unit = {
-    Tombstones.removeKeysAt(spark, Tombstones.tombPath(path), inserts,
-      Seq("s", "p", "o", "g"))
-    val novel = inserts.join(QuadDb.loadFrame(spark, path),
-      Seq("s", "p", "o", "g"), "left_anti").localCheckpoint()
-    if (!novel.isEmpty)
-      novel.withColumn("pred", PartitionedStore.predValue)
-        .write.mode("append").partitionBy("pred").parquet(path)
-    freeCheckpoint(novel)
-    spark.catalog.refreshByPath(path)
-  }
-
-  /** Resurrect tombstoned re-assertions, then append the novel rest. */
-  private def appendNovel(spark: SparkSession, path: String,
-                          inserts: DataFrame): Unit = {
-    Tombstones.removeKeysAt(spark, Tombstones.tombPath(path), inserts,
-      Seq("s", "p", "o"))
+  /** The shared durable-insert tail of a predicate-partitioned store
+    * keyed on `schema` ([[GraphMgmt]]'s LOAD/ADD/COPY/MOVE and SPARQL
+    * INSERT DATA use it too): resurrect re-asserted tombstoned rows,
+    * then append only the genuinely novel ones.
+    *
+    * Lineage contract: the resurrection step rewrites the tombstone
+    * set, and a frame whose lineage READS THE STORE would silently
+    * recompute against post-mutation state — the caller must cut such
+    * a frame first (an eager localCheckpoint). A frame that does not
+    * read the store (literal data) needs no cut. */
+  private[graft] def appendNovel(spark: SparkSession, path: String,
+                                 schema: StructType, inserts: DataFrame): Unit = {
+    val keys = schema.fieldNames.toSeq
+    Tombstones.removeKeysAt(spark, Tombstones.tombPath(path), inserts, keys)
     // against the POST-resurrection live view: a resurrected fact is
     // live again, so it is not re-appended (no physical duplicates);
     // checkpointed so the append never reads the store mid-write
-    val novel = inserts.join(TripleDb.loadFrame(spark, path),
-      Seq("s", "p", "o"), "left_anti").localCheckpoint()
+    val novel = inserts.join(
+      PartitionedStore.frame(spark, path, schema, PartitionedStore.Pred),
+      keys, "left_anti").localCheckpoint()
     if (!novel.isEmpty)
-      novel.withColumn("pred", PartitionedStore.predValue)
-        .write.mode("append").partitionBy("pred").parquet(path)
+      PartitionedStore.write(novel, path, PartitionedStore.Pred, "append")
     freeCheckpoint(novel)
     spark.catalog.refreshByPath(path)
   }
-
-  /** Drop a localCheckpoint'd frame's cached blocks (the Bpe
-    * freeCheckpoint pattern — an unpersisted checkpoint block
-    * otherwise pins heap until the cleaner's periodic GC). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 }

@@ -112,14 +112,13 @@ object SparqlUpdate {
   private def runOne(spark: SparkSession, path: String,
                      op: UpdateOp): Unit = op match {
     case InsertData(quads) =>
-      // literal data has no store lineage, but the checkpoint contract
-      // of appendNovelQuads is uniform — cheap on a literal frame
-      val df = QuadDb.fromQuads(spark, quads).df.localCheckpoint()
-      Update.appendNovelQuads(spark, path, df)
+      // literal data does not read the store: no lineage cut needed
+      Update.appendNovel(spark, path, QuadDb.schema,
+        QuadDb.fromQuads(spark, quads).df)
     case DeleteData(quads) =>
       // only facts actually LIVE become tombstones (absent = no-op)
       val doomed = QuadDb.fromQuads(spark, quads).df
-        .join(QuadDb.load(spark, path).df,
+        .join(QuadDb.loadFrame(spark, path),
           Seq("s", "p", "o", "g"), "left_semi")
       if (!doomed.isEmpty) QuadDb.deleteQuads(doomed, path)
     case Modify(del, ins, where) =>
@@ -135,14 +134,14 @@ object SparqlUpdate {
     case ClearOp(Some(g)) => GraphMgmt.clearGraph(spark, path, g)
     case ClearOp(None) =>
       // CLEAR ALL: tombstone every live quad (the full-mask form)
-      val live = QuadDb.load(spark, path).df
+      val live = QuadDb.loadFrame(spark, path)
       if (!live.isEmpty) QuadDb.deleteQuads(live, path)
     case ClearNamedOp => GraphMgmt.clearNamedGraphs(spark, path)
     case CreateOp(g, silent) =>
       // no empty-graph containers: nothing to write; §3.2.1's
       // already-exists error surfaces unless SILENT
-      if (!silent && !QuadDb.load(spark, path).df
-          .where(col("g") === graft.core.Term.lit(g)).limit(1).isEmpty)
+      if (!silent && !QuadDb.loadFrame(spark, path)
+          .where(col("g") === Term.lit(g)).limit(1).isEmpty)
         throw new InvalidBgp(
           s"CREATE GRAPH: graph $g already exists (has live quads) — " +
             "use CREATE SILENT to ignore")

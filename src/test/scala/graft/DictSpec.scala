@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{DictDb, Term, TripleDb}
+import graft.core.{DictDb, QuadDb, Term, TripleDb}
 import graft.core.Term._
 import graft.dsl._
 import graft.engine.{BgpCompiler, Projections}
@@ -245,6 +245,23 @@ class DictSpec extends GraftSpec {
       val ib = b.dict.orderBy("id").collect().map(_.getLong(0)).toSeq
       assert(ia == ib)
     } finally { a.unpersist(); b.unpersist() }
+  }
+
+  test("encode(db) ≡ encodeQuads(fromTripleDb(db)) with g dropped, " +
+      "the dict included") {
+    val t = DictDb.encode(friends)
+    val q = DictDb.encodeQuads(QuadDb.fromTripleDb(friends))
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Seq[Long]] =
+      df.collect().map(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def dict(df: org.apache.spark.sql.DataFrame): Set[(Long, Term)] =
+      df.collect().map(r => r.getLong(0) -> Term.fromRow(r.getStruct(1))).toSet
+    try {
+      assert(ids(q.quads.select("s", "p", "o")) == ids(t.triples))
+      assert(q.quads.where(col("g") =!= DictDb.termId(QuadDb.DefaultGraph))
+        .isEmpty)
+      assert(dict(q.dict) == dict(t.dict) +
+        (DictDb.termId(QuadDb.DefaultGraph) -> QuadDb.DefaultGraph))
+    } finally { t.unpersist(); q.unpersist() }
   }
 
   test("store advisor: one-shot and single-pattern stay on TripleDb, " +

@@ -57,6 +57,16 @@ abstract class GraftSpec extends AnyFunSuite {
   def bag1(xs: Seq[Seq[Term]]): Map[Seq[Term], Int] =
     xs.groupBy(identity).map { case (k, v) => k -> v.size }
 
+  /** Spark jobs `body` runs on this thread (job tag + status tracker). */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft-jobs-" + java.util.UUID.randomUUID()
+    sc.addJobTag(tag)
+    try body finally sc.removeJobTag(tag)
+    org.apache.spark.GraftCoreBridge.drainListenerBus(sc)
+    sc.statusTracker.getJobIdsForTag(tag).length
+  }
+
   def resultSet(d: TripleDb, vars: Seq[V], rows: Seq[PatternRow]): Set[Seq[Term]] =
     Projections.select(d, rows, vars).toSet
 }

@@ -16,16 +16,6 @@ class StoreLoadSpec extends GraftSpec {
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Spark jobs `body` runs on this thread (job tag + status tracker). */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val tag = "store-load-" + java.util.UUID.randomUUID()
-    sc.addJobTag(tag)
-    try body finally sc.removeJobTag(tag)
-    org.apache.spark.GraftCoreBridge.drainListenerBus(sc)
-    sc.statusTracker.getJobIdsForTag(tag).length
-  }
-
   private val facts: Seq[(Term, Term, Term)] =
     (1 to 20).map(i => (u(s"s$i"), k("name"), s(s"n$i"))) ++
       (1 to 20).map(i => (u(s"s$i"), k("age"), l(i.toLong)))
