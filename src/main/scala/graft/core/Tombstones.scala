@@ -4,16 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Shared tombstone + partition-pruned-compaction machinery for the
-  * durable stores ([[TripleDb]], [[QuadDb]], [[DictDb]]) — the same
-  * GDPR contract the near-dup / IVF-PQ indexes already carry: a delete
-  * appends a tiny tombstone file set (nothing in the store is
-  * rewritten), loads mask tombstoned rows, and compaction physically
-  * rewrites ONLY the parquet files that hold at least one deleted
-  * row. Untouched partition
+/** Shared tombstone + partition-pruned-compaction machinery for every
+  * durable relation: the stores ([[TripleDb]], [[QuadDb]], [[DictDb]])
+  * and the minhash and IVF-PQ indexes
+  * ([[graft.ops.Dedup.minhashIndexCompact]],
+  * [[graft.ops.Similarity.ivfPqCompactIndex]]). One GDPR contract: a
+  * delete appends a tiny tombstone file set (nothing in the relation is
+  * rewritten), loads mask tombstoned rows, and compaction ([[compactAt]],
+  * the one body all of them share) physically rewrites ONLY the parquet
+  * files that hold at least one deleted row. Untouched partition
   * directories — and untouched files inside affected partitions — are
   * never read-modified-written, so at 100 TB a takedown costs the
   * affected tenant's files, not the corpus.
+  *
+  * A compaction whose move fails leaves `<root>/_compact_staging` as the
+  * only copy of the affected files' live rows; compaction refuses to
+  * start while that directory exists.
   *
   * The tombstone set lives in an underscore-prefixed subdir of the
   * store root, invisible to parquet partition discovery, so raw reads
@@ -355,70 +361,123 @@ private[graft] object Tombstones {
   }
 
   /** Physically drop tombstoned rows from a `partitionBy(part)` store
-    * whose rows are `schema` (its key columns). Partition-pruned: only
-    * partitions named in the tombstones are even scanned to find
-    * affected files, and only files holding a deleted row are rewritten
-    * (staging-then-swap, same discipline as the index compactors). The
-    * store is read with its known schema ([[PartitionedStore.raw]]), so
-    * a rewritten partition keeps its exact name — an inferred `pred`
-    * would turn `007` into `7`. Clears the tombstone set at the end.
-    * A failed move into the store throws ([[renameOrDie]]) and keeps
-    * both the staging directory, which holds the affected files' live
-    * rows, and the tombstone set.
+    * whose rows are `schema` (its key columns), through [[compactAt]].
+    * The tombstone rows carry the partition value, so only the
+    * partitions they name are scanned. The store is read with its known
+    * schema ([[PartitionedStore.raw]]), so a rewritten partition keeps
+    * its exact name — an inferred `pred` would turn `007` into `7`.
     */
   def compactPartitioned(spark: SparkSession, store: String,
-                         schema: StructType, part: StructField): Unit = {
-    if (!exist(spark, store)) return
-    val keyCols = schema.fieldNames.toSeq
-    val partCol = part.name
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(hconf)
-    val tomb = spark.read.schema(schema.add(part)).parquet(tombPath(store))
-    // bounded by the store's partition count (predicates / pred ids)
-    val parts = tomb.select(partCol).distinct().collect().map(_.get(0))
-    val keys = tomb.select(keyCols.map(col): _*)
-    // file list bounded by the AFFECTED partitions' file count
-    val affected = PartitionedStore.raw(spark, store, schema, part)
-      .where(col(partCol).isin(parts.toIndexedSeq: _*))
-      .withColumn("_f", input_file_name())
-      .join(keys, keyCols).select("_f").distinct()
-      .collect().map(_.getString(0))
-    if (affected.nonEmpty) {
-      val staging = s"$store/_compact_staging"
-      // re-read through the store root and filter to the affected files
-      // by the SAME input_file_name() strings the listing produced —
-      // feeding those URI-encoded strings back into spark.read.parquet
-      // would mis-resolve partition values that needed escaping (a pred
-      // lex containing '/' lands on disk as pred=...%2F... and in the
-      // URI as %252F); string-equality against the same function cannot
-      val affectedSet = affected.toSet
-      PartitionedStore.raw(spark, store, schema, part)
-        .where(col(partCol).isin(parts.toIndexedSeq: _*))
-        .where(input_file_name().isInCollection(affectedSet))
-        .join(keys, keyCols, "left_anti")
-        .write.mode("overwrite").partitionBy(partCol).parquet(staging)
-      affected.foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false))
-      val stagingPath = new org.apache.hadoop.fs.Path(staging)
-      fs.listStatus(stagingPath).foreach { d =>
-        if (d.isDirectory && d.getPath.getName.startsWith(partCol + "=")) {
-          val dest = new org.apache.hadoop.fs.Path(store, d.getPath.getName)
-          fs.mkdirs(dest)
-          fs.listStatus(d.getPath).foreach { st =>
-            if (st.getPath.getName.endsWith(".parquet"))
-              renameOrDie(fs, st.getPath,
-                new org.apache.hadoop.fs.Path(dest, st.getPath.getName),
-                s"the rewritten rows not yet moved are in $staging and " +
-                  "the tombstone set is kept")
-          }
-        }
-      }
-      fs.delete(stagingPath, true)
+                         schema: StructType, part: StructField): Unit =
+    compactAt(spark, tombPath(store), schema.add(part),
+      Seq(store -> Some(part.name)))(PartitionedStore.raw(spark, _, schema, part))
+
+  /** Where a compaction stages the survivors of a relation's rewritten
+    * files, under the relation root. */
+  private def stagingPath(root: String) =
+    new org.apache.hadoop.fs.Path(root, "_compact_staging")
+
+  /** The one compaction of every durable relation: the stores, the
+    * minhash index and the IVF-PQ codes and raw sidecar. It drops the
+    * rows whose keys are in the tombstone set at `tombDir`, from each
+    * of `relations` (a root and its partition column, if any), then
+    * clears that set.
+    *
+    * `keys` is the tombstone set's schema. A field that names a
+    * relation's partition column prunes: only the partitions the
+    * tombstone rows name are scanned. The other fields are the keys.
+    * `read` reads a relation's rows, partition column included, from
+    * its root. A relation whose root does not exist is skipped.
+    *
+    * Per relation, only the files holding a tombstoned key are
+    * rewritten. Their survivors are written to `<root>/_compact_staging`,
+    * the originals are deleted, and the staged files move into the
+    * same partitions. A partition left with no data file is removed.
+    *
+    * A failed move throws ([[renameOrDie]]) and keeps the staging
+    * directory and the tombstone set. The affected originals are gone
+    * by then, so the staging directory holds the only copy of their
+    * live rows. Compaction therefore refuses to start while any
+    * relation's staging directory exists: it throws and keeps the
+    * tombstones, rather than overwrite or orphan those rows.
+    */
+  def compactAt(spark: SparkSession, tombDir: String, keys: StructType,
+                relations: Seq[(String, Option[String])])
+               (read: String => DataFrame): Unit = {
+    if (!existAt(spark, tombDir)) return
+    val fs = new org.apache.hadoop.fs.Path(tombDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present =
+      relations.filter(r => fs.exists(new org.apache.hadoop.fs.Path(r._1)))
+    present.map(r => stagingPath(r._1)).find(fs.exists).foreach { p =>
+      throw new java.io.IOException(
+        s"$p exists: a failed compaction left it, and it may hold the " +
+          "only copy of live rows — move its data files into the " +
+          "relation and delete it before compacting; the tombstone set " +
+          "is kept")
     }
-    fs.delete(new org.apache.hadoop.fs.Path(tombPath(store)), true)
+    val tomb = spark.read.schema(keys).parquet(tombDir)
+    present.foreach { case (root, part) =>
+      rewriteAffected(fs, root, part, read(root), tomb)
+    }
+    fs.delete(new org.apache.hadoop.fs.Path(tombDir), true)
     // files were replaced in place — drop cached listings so open
     // sessions re-list instead of chasing deleted part files
-    spark.catalog.refreshByPath(store)
-    spark.catalog.refreshByPath(tombPath(store))
+    present.foreach(r => spark.catalog.refreshByPath(r._1))
+    spark.catalog.refreshByPath(tombDir)
+  }
+
+  /** [[compactAt]]'s per-relation step: rewrite the files of `all`
+    * (the relation at `root`) that hold a key of `tomb`. */
+  private def rewriteAffected(fs: org.apache.hadoop.fs.FileSystem,
+                              root: String, part: Option[String],
+                              all: DataFrame, tomb: DataFrame): Unit = {
+    val pruneCol = part.filter(tomb.columns.contains)
+    val keyCols = tomb.columns.toSeq.filterNot(pruneCol.contains)
+    val keys = tomb.select(keyCols.map(col): _*)
+    // bounded by the relation's partition count
+    val rows = pruneCol.fold(all) { p =>
+      all.where(col(p).isin(
+        tomb.select(p).distinct().collect().map(_.get(0)).toIndexedSeq: _*))
+    }
+    // file list bounded by the scanned partitions' file count
+    val affected = rows.withColumn("_f", input_file_name())
+      .join(keys, keyCols).select("_f").distinct()
+      .collect().map(_.getString(0))
+    if (affected.isEmpty) return
+    val staging = stagingPath(root)
+    // re-read through the root and filter to the affected files by the
+    // SAME input_file_name() strings the listing produced — feeding
+    // those URI-encoded strings back into spark.read.parquet would
+    // mis-resolve partition values that needed escaping (a pred lex
+    // containing '/' lands on disk as pred=...%2F... and in the URI as
+    // %252F); string-equality against the same function cannot
+    val survivors = rows.where(input_file_name().isInCollection(affected.toSet))
+      .join(keys, keyCols, "left_anti").write
+    part.fold(survivors)(survivors.partitionBy(_)).parquet(staging.toString)
+    val affectedPaths =
+      affected.map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)))
+    affectedPaths.foreach(fs.delete(_, false))
+    def moveIn(from: org.apache.hadoop.fs.Path,
+               to: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(from).foreach { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory && isDataFile(name)) { // a partition
+          val dest = new org.apache.hadoop.fs.Path(to, name)
+          fs.mkdirs(dest)
+          moveIn(st.getPath, dest)
+        } else if (name.endsWith(".parquet"))
+          renameOrDie(fs, st.getPath, new org.apache.hadoop.fs.Path(to, name),
+            s"the rewritten rows not yet moved are in $staging and the " +
+              "tombstone set is kept")
+      }
+    moveIn(staging, new org.apache.hadoop.fs.Path(root))
+    if (part.isDefined)
+      affectedPaths.map(_.getParent).distinct.foreach { dir =>
+        if (!fs.listStatus(dir).exists(st =>
+            st.isFile && isDataFile(st.getPath.getName)))
+          fs.delete(dir, true)
+      }
+    fs.delete(staging, true)
   }
 }

@@ -198,12 +198,6 @@ object Dedup {
     * the ids as longs, whatever the index's own id type. */
   private val IdKeys = StructType(Seq(StructField("id", LongType)))
 
-  private def tombPath(path: String): String =
-    graft.core.Tombstones.tombPath(path)
-  private def tombstonesExist(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Boolean =
-    graft.core.Tombstones.exist(spark, path)
-
   /** GDPR-style takedown for a durable index: append the ids to a
     * tombstone file set under an underscore-prefixed subdir (invisible
     * to parquet directory readers, so raw reads of the index dir are
@@ -219,52 +213,16 @@ object Dedup {
   /** Physically drop tombstoned rows, rewriting ONLY the parquet files
     * that contain at least one deleted id — untouched files are never
     * read-modified-written (at 100 TB a takedown of one tenant touches
-    * their files, not the corpus). Staging-then-swap: survivors of the
-    * affected files are written to an underscore staging dir, the
-    * affected originals are deleted, the staged part files move in,
-    * and the tombstones clear. Load/probe before and after are
-    * equivalent (spec-pinned). */
+    * their files, not the corpus). The index is unpartitioned; the
+    * staging, move, refusal and cleanup rules are the shared body's
+    * ([[graft.core.Tombstones.compactAt]]), which also removes emptied
+    * partitions of partitioned relations. Load/probe before and after
+    * are equivalent (spec-pinned). */
   def minhashIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    if (!tombstonesExist(spark, path)) return
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    val tomb = spark.read.parquet(tombPath(path))
-    // file list is bounded by the index's file count, and only files
-    // actually holding a deleted id survive the distinct
-    val affected = spark.read.parquet(path)
-      .withColumn("_f", input_file_name())
-      .join(tomb, "id").select("_f").distinct()
-      .collect().map(_.getString(0))
-    if (affected.nonEmpty) {
-      val staging = s"$path/_compact_staging"
-      // re-read through the index root and filter to the affected files
-      // by the SAME input_file_name() strings the listing produced —
-      // never feed those URI-encoded strings back to spark.read.parquet
-      // (they mis-resolve anything that needed escaping: a '%' or space
-      // in the index path itself, or a future partition layout; the
-      // Tombstones.compactPartitioned idiom, round-10 lesson)
-      val affectedSet = affected.toSet
-      spark.read.parquet(path)
-        .where(input_file_name().isInCollection(affectedSet))
-        .join(tomb, Seq("id"), "left_anti")
-        .write.mode("overwrite").parquet(staging)
-      affected.foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false))
-      val stagingPath = new org.apache.hadoop.fs.Path(staging)
-      fs.listStatus(stagingPath).foreach { st =>
-        if (st.getPath.getName.endsWith(".parquet"))
-          fs.rename(st.getPath,
-            new org.apache.hadoop.fs.Path(path, st.getPath.getName))
-      }
-      fs.delete(stagingPath, true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tombPath(path)), true)
-    // compaction replaces files in place — drop any cached listings so
-    // open sessions re-list instead of chasing deleted part files
-    spark.catalog.refreshByPath(path)
-    spark.catalog.refreshByPath(tombPath(path))
-  }
+                          path: String): Unit =
+    graft.core.Tombstones.compactAt(spark,
+      graft.core.Tombstones.tombPath(path), IdKeys,
+      Seq(path -> None))(spark.read.parquet(_))
 
   /** Incremental near-dup: a NEW batch of docs against an EXISTING
     * corpus index (the [[minhashIndex]] layout). Returns verified

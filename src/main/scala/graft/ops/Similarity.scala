@@ -862,12 +862,6 @@ object Similarity {
     * ids as longs, whatever the index's own id type. */
   private val VecIdKeys = StructType(Seq(StructField("vec_id", LongType)))
 
-  private def ivfPqTombstonesExist(spark: SparkSession,
-                                   path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(ivfPqTombPath(path))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Tombstone-delete vectors from a durable IVF-PQ index: one tiny
     * append beside the codes — nothing in the index is rewritten.
     * [[ivfPqLoadIndex]] masks deleted ids at read;
@@ -879,58 +873,18 @@ object Similarity {
       ids.select(col(idCol).cast("long").as("vec_id")),
       ivfPqTombPath(path), keyCols = Seq("vec_id"))
 
-  /** Physically drop tombstoned vectors, rewriting ONLY the cell
-    * partitions that contain at least one deleted id — the other cell
-    * directories are never touched (spec-pinned), so compaction cost
-    * scales with the delete's spread, not the index. Cells left empty
-    * are removed outright. */
-  def ivfPqCompactIndex(spark: SparkSession, path: String): Unit = {
-    if (!ivfPqTombstonesExist(spark, path)) return
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val codesPath = s"$path/codes"
-    val fs = new org.apache.hadoop.fs.Path(codesPath).getFileSystem(hconf)
-    val tomb = spark.read.parquet(ivfPqTombPath(path))
-    val codes = spark.read.parquet(codesPath)
-    val affected = codes.join(tomb, "vec_id")
-      .select("cell").distinct().collect().map(_.getInt(0))
-    def compactRelation(relPath: String): Unit = affected.foreach { cell =>
-      val dir = new org.apache.hadoop.fs.Path(relPath, s"cell=$cell")
-      if (fs.exists(dir)) {
-        val kept = spark.read.parquet(dir.toString)
-          .join(tomb, Seq("vec_id"), "left_anti")
-        if (kept.isEmpty) {
-          // every vector of the cell was deleted: the partition
-          // vanishes (a zero-row part file would still read fine, but
-          // an empty directory is the honest state and keeps probes
-          // pruning it)
-          fs.delete(dir, true)
-        } else {
-          val staging =
-            new org.apache.hadoop.fs.Path(relPath, s"_staging_cell_$cell")
-          kept.write.mode("overwrite").parquet(staging.toString)
-          fs.delete(dir, true)
-          fs.mkdirs(dir)
-          fs.listStatus(staging)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .foreach(st => fs.rename(st.getPath,
-              new org.apache.hadoop.fs.Path(dir, st.getPath.getName)))
-          fs.delete(staging, true)
-        }
-      }
-    }
-    compactRelation(codesPath)
-    // the refine sidecar (keepRaw) shares the tombstone set — compact
-    // it in the same pass or clearing the tombstones below would
-    // resurrect deleted raw vectors
-    val rawPath = new org.apache.hadoop.fs.Path(s"$path/raw")
-    if (fs.exists(rawPath)) compactRelation(rawPath.toString)
-    fs.delete(new org.apache.hadoop.fs.Path(ivfPqTombPath(path)), true)
-    // compaction replaces files in place — drop any cached listings so
-    // open sessions re-list instead of chasing deleted part files
-    spark.catalog.refreshByPath(codesPath)
-    if (fs.exists(rawPath)) spark.catalog.refreshByPath(rawPath.toString)
-    spark.catalog.refreshByPath(ivfPqTombPath(path))
-  }
+  /** Physically drop tombstoned vectors, rewriting ONLY the files that
+    * hold a deleted id — other files, and every cell directory holding
+    * none, are never touched (spec-pinned), so compaction cost scales
+    * with the delete's spread, not the index. The codes and, with
+    * `keepRaw`, the refine sidecar compact against their one tombstone
+    * set before it clears, or clearing it would resurrect deleted raw
+    * vectors. The shared body ([[graft.core.Tombstones.compactAt]])
+    * stages, moves and refuses; cells left empty are removed. */
+  def ivfPqCompactIndex(spark: SparkSession, path: String): Unit =
+    graft.core.Tombstones.compactAt(spark, ivfPqTombPath(path), VecIdKeys,
+      Seq(s"$path/codes", s"$path/raw").map(_ -> Some("cell")))(
+      spark.read.parquet(_))
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     * cluster the corpus with a coarse quantizer, then mark as duplicate

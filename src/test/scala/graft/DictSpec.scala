@@ -4,7 +4,7 @@ import graft.core.{DictDb, QuadDb, Term, TripleDb}
 import graft.core.Term._
 import graft.dsl._
 import graft.engine.{BgpCompiler, Projections}
-import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.functions.{array, col, explode, xxhash64}
 import org.apache.spark.sql.types.LongType
 
 /** Dictionary-encoded store (DictDb): id parity, struct≡dict result
@@ -262,6 +262,20 @@ class DictSpec extends GraftSpec {
       assert(dict(q.dict) == dict(t.dict) +
         (DictDb.termId(QuadDb.DefaultGraph) -> QuadDb.DefaultGraph))
     } finally { t.unpersist(); q.unpersist() }
+  }
+
+  test("0.0 and -0.0 get one dict id, as struct grouping makes them one " +
+      "term") {
+    val d = db((rick, label, TDouble(0.0)), (rick, label, TDouble(-0.0)))
+    val triples = d.df.distinct().count()
+    val terms = d.df.select(explode(array(col("s"), col("p"), col("o"))))
+      .distinct().count()
+    assert(DictDb.termId(TDouble(0.0)) == DictDb.termId(TDouble(-0.0)))
+    val enc = DictDb.encode(d) // the collision check would throw here
+    try {
+      assert(enc.triples.count() == triples)
+      assert(enc.dict.count() == terms)
+    } finally enc.unpersist()
   }
 
   test("store advisor: one-shot and single-pattern stay on TripleDb, " +

@@ -3,7 +3,7 @@ package graft
 import graft.core.{PartitionedStore, QuadDb, Term, Tombstones, TripleDb}
 import graft.core.Term._
 import graft.dsl._
-import graft.ops.Update
+import graft.ops.{Dedup, Similarity, Update}
 import graft.sparql.SparqlUpdate
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
@@ -21,9 +21,10 @@ class FailingRenameFs extends RawLocalFileSystem {
     else super.rename(src, dst)
 }
 
-/** Durable mutations on the triple and quad layouts: the Spark jobs
-  * each one runs, the two layouts agreeing step by step on one op
-  * sequence, and a compaction whose file move fails. */
+/** Durable mutations on the triple and quad layouts and on the minhash
+  * and IVF-PQ indexes: the Spark jobs each one runs, the two layouts
+  * agreeing step by step on one op sequence, and compactions whose file
+  * move fails. */
 class DurableMutationSpec extends GraftSpec {
 
   private def tmpDir(prefix: String): String =
@@ -163,5 +164,117 @@ class DurableMutationSpec extends GraftSpec {
         Set((k("b"), amt, l(1)), (k("c"), amt, l(9))))
       assert(Tombstones.exist(spark, path))
     } finally hconf.unset("fs.failrename.impl")
+  }
+
+  /** `body` with the `failrename` scheme registered, given a fresh
+    * directory under that scheme. */
+  private def withFailingRename(prefix: String)(body: String => Unit): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.failrename.impl", classOf[FailingRenameFs].getName)
+    try body("failrename://" + tmpDir(prefix))
+    finally hconf.unset("fs.failrename.impl")
+  }
+
+  /** A minhash index over 40 small docs in 4 files, with every fourth
+    * doc tombstoned. Returns the live ids. */
+  private def minhashWithDeletes(path: String): Set[Long] = {
+    val docs = spark.createDataFrame((0L until 40L).map(i =>
+        (i, (0 until 12).map(j => s"w${(i * 7 + j * j) % 23}").mkString(" "))))
+      .toDF("doc_id", "text")
+    Dedup.minhashIndexSave(
+      Dedup.minhashIndex(docs, "doc_id", "text").repartition(4), path)
+    Dedup.minhashIndexDelete(docs.where("doc_id % 4 = 1"), path,
+      idCol = "doc_id")
+    (0L until 40L).filter(_ % 4 != 1).toSet
+  }
+
+  /** A `keepRaw` IVF-PQ index over 48 vectors in 4 cells, with every
+    * vector of vector 0's cell and every vector `i % 5 == 3`
+    * tombstoned. Returns that cell and the live ids. */
+  private def ivfPqWithDeletes(path: String): (Int, Set[Long]) = {
+    val vecs = spark.createDataFrame((0L until 48L).map(i =>
+        (i, Seq.tabulate(64)(j => math.sin(i * 0.7 + j * (i % 4 + 1)).toFloat))))
+      .toDF("vec_id", "embedding")
+    val cents = vecs.where("vec_id < 4").orderBy("vec_id").collect()
+      .map(_.getSeq[Float](1).toArray).toSeq
+    Similarity.ivfPqSaveIndex(vecs, cents, cents, path, keepRaw = true)
+    val codes = spark.read.parquet(s"$path/codes")
+    val cell = codes.where("vec_id = 0").head().getAs[Int]("cell")
+    val victims = codes.where(s"cell = $cell or vec_id % 5 = 3")
+      .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
+    Similarity.ivfPqDeleteIndex(
+      spark.createDataFrame(victims.toSeq.map(Tuple1(_))).toDF("vec_id"), path)
+    (cell, (0L until 48L).toSet -- victims)
+  }
+
+  /** The distinct long `c` values of the relation at `path` (read with
+    * that schema, so a directory left with no data file reads empty). */
+  private def ids(path: String, c: String): Set[Long] =
+    spark.read.schema(s"$c long").parquet(path).distinct()
+      .collect().map(_.getLong(0)).toSet
+
+  test("job counts of minhash and IVF-PQ index compaction") {
+    val mh = tmpDir("graft_jobs_mh") + "/idx"
+    val pq = tmpDir("graft_jobs_pq") + "/idx"
+    minhashWithDeletes(mh)
+    val (cell, live) = ivfPqWithDeletes(pq)
+    val counts = Seq(
+      "minhash" -> jobsOf(Dedup.minhashIndexCompact(spark, mh)),
+      "ivfpq" -> jobsOf(Similarity.ivfPqCompactIndex(spark, pq)))
+    // the tombstone set is read with its key schema and IVF-PQ rewrites
+    // only affected files, not whole cells: 8 and 41 jobs before
+    assert(counts == Seq("minhash" -> 6, "ivfpq" -> 12))
+    assert(!new java.io.File(s"$pq/codes/cell=$cell").exists)
+    assert(!new java.io.File(s"$pq/raw/cell=$cell").exists)
+    assert(ids(s"$pq/codes", "vec_id") == live)
+    assert(ids(s"$pq/raw", "vec_id") == live)
+  }
+
+  test("an index compaction whose move out of staging fails throws, and " +
+      "keeps the staged survivors and the tombstones") {
+    withFailingRename("graft_compact_rename_idx") { root =>
+      val mh = root + "/minhash"
+      val mhLive = minhashWithDeletes(mh)
+      intercept[java.io.IOException](Dedup.minhashIndexCompact(spark, mh))
+      assert(ids(mh, "id") ++
+        ids(mh + "/_compact_staging", "id") == mhLive)
+      assert(Tombstones.exist(spark, mh))
+
+      val pq = root + "/ivfpq"
+      val (_, pqLive) = ivfPqWithDeletes(pq)
+      intercept[java.io.IOException](Similarity.ivfPqCompactIndex(spark, pq))
+      assert(ids(pq + "/codes", "vec_id") ++
+        ids(pq + "/codes/_compact_staging", "vec_id") ==
+        pqLive)
+      assert(Tombstones.existAt(spark, pq + "/tombstones"))
+    }
+  }
+
+  test("a compaction after a failed one refuses to start, and keeps the " +
+      "staged rows and the tombstones") {
+    withFailingRename("graft_compact_refuse") { root =>
+      def refused(compact: => Unit): Unit = {
+        intercept[java.io.IOException](compact)
+        val e = intercept[java.io.IOException](compact)
+        assert(e.getMessage.contains("only copy of live rows"), e.getMessage)
+      }
+      val store = root + "/store"
+      TripleDb.save(db(base: _*), store)
+      TripleDb.deleteTriples(db((k("a"), amt, l(5))).df, store)
+      refused(TripleDb.compact(spark, store))
+      val staged = spark.read
+        .schema(TripleDb.schema.add(PartitionedStore.Pred))
+        .parquet(store + "/_compact_staging")
+      assert(TripleDb(staged.drop("pred")).triples.toSet ==
+        Set((k("b"), amt, l(1)), (k("c"), amt, l(9))))
+      assert(Tombstones.exist(spark, store))
+
+      val mh = root + "/minhash"
+      val mhLive = minhashWithDeletes(mh)
+      refused(Dedup.minhashIndexCompact(spark, mh))
+      assert(ids(mh, "id") ++
+        ids(mh + "/_compact_staging", "id") == mhLive)
+      assert(Tombstones.exist(spark, mh))
+    }
   }
 }
